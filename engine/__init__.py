@@ -8,7 +8,7 @@ sequence out, under the span-sequence-equality invariant
 
 Module map (see SURVEY.md §7.1):
 
-- :mod:`engine.session`   — SparkSession factory tuned for local[N] testing
+- :mod:`engine.session`   — SparkSession factory tuned for local[N] testing; per-session expression cache
 - :mod:`engine.schema`    — StructType constants (spans in/out, layout, lineage, metrics)
 - :mod:`engine.codec`     — deterministic synthetic media-payload codec (FIXTURES.md §2)
 - :mod:`engine.fixtures`  — seeded corpus generator (spans + media_blobs parquet)

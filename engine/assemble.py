@@ -19,9 +19,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from engine.session import per_session
 
-def _kept_span() -> object:
-    return F.when(
+
+@per_session
+def _reassemble_exprs() -> tuple:
+    """(kept-span struct, its sorted per-doc aggregate, output projection)
+    of :func:`reassemble`."""
+    kept_span = F.when(
         F.col("status") == "kept",
         F.struct(
             F.col("offset"),
@@ -29,6 +34,22 @@ def _kept_span() -> object:
             F.col("out_text").alias("text"),
             F.col("media_ref"),
         ),
+    )
+    # array_sort on a struct orders by the first field (offset) — then
+    # re-project to the output contract's field order (kind, text, media_ref, offset).
+    spans_out = F.transform(
+        "_ordered",
+        lambda s: F.struct(
+            s["kind"].alias("kind"),
+            s["text"].alias("text"),
+            s["media_ref"].alias("media_ref"),
+            s["offset"].alias("offset"),
+        ),
+    ).alias("spans_out")
+    return (
+        kept_span,
+        F.array_sort(F.collect_list(kept_span)).alias("_ordered"),
+        (F.col("doc_id"), spans_out),
     )
 
 
@@ -47,7 +68,7 @@ def reassemble(spine: DataFrame, salt_partials: int = 0) -> DataFrame:
     """
     from engine.skew import salt_col
 
-    kept_span = _kept_span()
+    kept_span, ordered, out_cols = _reassemble_exprs()
     if salt_partials > 0:
         partial = spine.groupBy(
             "doc_id", salt_col(salt_partials, "offset").alias("_salt")
@@ -56,20 +77,5 @@ def reassemble(spine: DataFrame, salt_partials: int = 0) -> DataFrame:
             F.array_sort(F.flatten(F.collect_list("_part"))).alias("_ordered")
         )
     else:
-        nested = spine.groupBy("doc_id").agg(
-            F.array_sort(F.collect_list(kept_span)).alias("_ordered")
-        )
-    # array_sort on a struct orders by the first field (offset) — then
-    # re-project to the output contract's field order (kind, text, media_ref, offset).
-    return nested.select(
-        "doc_id",
-        F.transform(
-            "_ordered",
-            lambda s: F.struct(
-                s["kind"].alias("kind"),
-                s["text"].alias("text"),
-                s["media_ref"].alias("media_ref"),
-                s["offset"].alias("offset"),
-            ),
-        ).alias("spans_out"),
-    )
+        nested = spine.groupBy("doc_id").agg(ordered)
+    return nested.select(*out_cols)

@@ -381,39 +381,6 @@ def bitmap_corpus_rows(
     return all_spans, all_blobs, all_specs
 
 
-def spark_bitmap_corpus(spark, n_docs: int, seed: int = 42, partitions: int = 32, **kw: Any):
-    """Distributed bitmap-corpus generation (twin of spark_corpus): pure
-    function of (seed, i) per doc, so any executor can render any doc —
-    the property that lets a web-scale raster corpus be generated in place.
-    Returns (spans_df, blobs_df)."""
-    import pandas as pd
-
-    from engine.schema import MEDIA_BLOBS_SCHEMA, SPANS_SCHEMA
-
-    base = spark.range(0, n_docs, 1, partitions)
-
-    def gen_spans(batches):
-        for pdf in batches:
-            rows = [gen_bitmap_doc(seed, int(i), **kw)[0] for i in pdf["id"]]
-            yield pd.DataFrame(
-                {"doc_id": [r["doc_id"] for r in rows], "spans": [r["spans"] for r in rows]}
-            )
-
-    def gen_blobs(batches):
-        for pdf in batches:
-            out = {"media_ref": [], "payload": []}
-            for i in pdf["id"]:
-                for b in gen_bitmap_doc(seed, int(i), **kw)[1]:
-                    out["media_ref"].append(b["media_ref"])
-                    out["payload"].append(b["payload"])
-            yield pd.DataFrame(out)
-
-    return (
-        base.mapInPandas(gen_spans, SPANS_SCHEMA),
-        base.mapInPandas(gen_blobs, MEDIA_BLOBS_SCHEMA),
-    )
-
-
 def write_bitmap_corpus(
     out_dir: str,
     n_docs: int,

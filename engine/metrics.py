@@ -21,17 +21,52 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.observation import Observation
 
+from engine.session import per_session
 
-def lineage_df(spine: DataFrame, run_id: str) -> DataFrame:
-    return spine.select(
-        F.lit(run_id).alias("run_id"),
-        F.spark_partition_id().alias("partition_id"),
-        "doc_id",
-        "offset",
+
+def _count_status(status: str):
+    return F.sum(F.when(F.col("status") == status, 1).otherwise(0))
+
+
+def _run_id(run_id: str):
+    # outside the cached factories: one cache entry per run id would grow
+    # without bound in a long-lived (streaming) session
+    return F.lit(run_id).alias("run_id")
+
+
+@per_session
+def _lineage_exprs() -> tuple:
+    """The columns after run_id and partition_id of :func:`lineage_df`."""
+    return (
+        F.col("doc_id"),
+        F.col("offset"),
         F.when(F.col("status") == "skipped", F.concat(F.lit("skipped_"), F.col("reason")))
         .otherwise(F.col("status"))
         .alias("status"),
         F.col("reason"),
+    )
+
+
+def lineage_df(spine: DataFrame, run_id: str) -> DataFrame:
+    return spine.select(
+        _run_id(run_id), F.spark_partition_id().alias("partition_id"), *_lineage_exprs()
+    )
+
+
+@per_session
+def _metrics_exprs() -> tuple:
+    """(aggregates, output columns after run_id) of :func:`metrics_df`."""
+    return (
+        (
+            F.countDistinct("doc_id").alias("docs_processed"),
+            _count_status("kept").alias("spans_kept"),
+            F.sum(F.when(F.col("status") != "kept", 1).otherwise(0)).alias("spans_dropped"),
+            _count_status("error").alias("errors"),
+        ),
+        tuple(
+            F.col(c)
+            for c in ("partition_id", "docs_processed", "spans_kept", "spans_dropped", "errors")
+        ),
     )
 
 
@@ -45,27 +80,20 @@ def metrics_df(spine: DataFrame, run_id: str) -> DataFrame:
     docs_processed is distinct-per-partition (a doc whose spans straddle two
     spine partitions appears in both rows — per-partition progress semantics,
     same as the reference's per-batch counters)."""
+    aggs, out = _metrics_exprs()
     base = spine.select(
-        F.spark_partition_id().alias("partition_id"), "doc_id", F.col("status")
+        F.spark_partition_id().alias("partition_id"), F.col("doc_id"), F.col("status")
     )
+    return base.groupBy("partition_id").agg(*aggs).select(_run_id(run_id), *out)
+
+
+@per_session
+def _run_totals_exprs() -> tuple:
     return (
-        base.groupBy("partition_id")
-        .agg(
-            F.countDistinct("doc_id").alias("docs_processed"),
-            F.sum(F.when(F.col("status") == "kept", 1).otherwise(0)).alias("spans_kept"),
-            F.sum(F.when(F.col("status") != "kept", 1).otherwise(0)).alias(
-                "spans_dropped"
-            ),
-            F.sum(F.when(F.col("status") == "error", 1).otherwise(0)).alias("errors"),
-        )
-        .select(
-            F.lit(run_id).alias("run_id"),
-            "partition_id",
-            "docs_processed",
-            "spans_kept",
-            "spans_dropped",
-            "errors",
-        )
+        F.countDistinct("doc_id").alias("docs_total"),
+        F.count(F.lit(1)).alias("spans_total"),
+        _count_status("kept").alias("spans_kept"),
+        _count_status("error").alias("errors"),
     )
 
 
@@ -77,12 +105,18 @@ def run_totals_df(spine: DataFrame, run_id: str) -> DataFrame:
     several rows), so summing it across partitions overcounts documents.
     Consumers that want "how many documents did this run process" read this
     table; the per-partition rows remain the progress/skew view."""
-    return spine.agg(
-        F.lit(run_id).alias("run_id"),
-        F.countDistinct("doc_id").alias("docs_total"),
-        F.count(F.lit(1)).alias("spans_total"),
-        F.sum(F.when(F.col("status") == "kept", 1).otherwise(0)).alias("spans_kept"),
-        F.sum(F.when(F.col("status") == "error", 1).otherwise(0)).alias("errors"),
+    return spine.agg(_run_id(run_id), *_run_totals_exprs())
+
+
+@per_session
+def _conf_histogram_exprs() -> tuple:
+    """(filter, bucket, aggregate, output columns after run_id) of
+    :func:`conf_histogram_df`."""
+    return (
+        F.col("conf").isNotNull(),
+        F.least(F.floor(F.col("conf") * 10).cast("int"), F.lit(9)).alias("conf_bucket"),
+        F.count("*").alias("conf_count"),
+        (F.col("partition_id"), F.col("conf_bucket"), F.col("conf_count")),
     )
 
 
@@ -90,31 +124,26 @@ def conf_histogram_df(spine: DataFrame, run_id: str) -> DataFrame:
     """A6 — OCR-confidence histogram (bucket = min(floor(conf*10), 9)),
     keyed by (partition_id, conf_bucket); spans without a confidence
     (text branch) are excluded."""
+    has_conf, bucket, count, out = _conf_histogram_exprs()
     return (
-        spine.filter(F.col("conf").isNotNull())
-        .select(
-            F.spark_partition_id().alias("partition_id"),
-            F.least(F.floor(F.col("conf") * 10).cast("int"), F.lit(9)).alias(
-                "conf_bucket"
-            ),
-        )
+        spine.filter(has_conf)
+        .select(F.spark_partition_id().alias("partition_id"), bucket)
         .groupBy("partition_id", "conf_bucket")
-        .agg(F.count("*").alias("conf_count"))
-        .select(
-            F.lit(run_id).alias("run_id"), "partition_id", "conf_bucket", "conf_count"
-        )
+        .agg(count)
+        .select(_run_id(run_id), *out)
+    )
+
+
+@per_session
+def _observed_exprs() -> tuple:
+    return (
+        F.count(F.lit(1)).alias("spans_total"),
+        _count_status("kept").alias("spans_kept"),
+        _count_status("error").alias("errors"),
     )
 
 
 def observed(df: DataFrame, name: str = "extraction") -> tuple[DataFrame, Observation]:
     """Attach observe() metrics to the spine — free counts at action time."""
     obs = Observation(name)
-    return (
-        df.observe(
-            obs,
-            F.count(F.lit(1)).alias("spans_total"),
-            F.sum(F.when(F.col("status") == "kept", 1).otherwise(0)).alias("spans_kept"),
-            F.sum(F.when(F.col("status") == "error", 1).otherwise(0)).alias("errors"),
-        ),
-        obs,
-    )
+    return df.observe(obs, *_observed_exprs()), obs

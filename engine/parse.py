@@ -5,6 +5,11 @@ Pure Column expressions over a document's joined text.  Reference:
 /root/reference/app/core/parsers/header_parser.py (massara mode :27-61,
 invoice mode :63-175, janzour mode :177-214, idcard :219-245) and the
 canonical JSON templates at pdf_processor.py:219-271 / :459-514.
+
+The canonical document is row-local: headers, sections and footer are each
+one Column over a document's row, so :func:`extract_documents` plans no
+exchange of its own — only :func:`doc_modes` aggregates.  Their expression
+trees are built once per session (``engine.session.per_session``).
 """
 
 from __future__ import annotations
@@ -14,6 +19,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from engine import tables, textops
+from engine.session import per_session
 
 _ML = "(?m)"  # multiline flag — labels sit at line starts
 
@@ -265,117 +271,195 @@ def parse_idcard(text: Column) -> Column:
 # Canonical document: sections + footer from service tables (A5, W4, W5)
 # ---------------------------------------------------------------------------
 
+_TABLE_RE = r"(?s)(<table>.*?</table>)"
+
+
+def _tagged_items(per_table: Column) -> Column:
+    """The document's item rows in (tpos, rpos) order, each tagged with its
+    table's tpos and subtotal and with ``section_name``: the last non-null
+    section marker at or before it, carried across tables (F11's
+    last-non-null rule, table_parser.py:26-48).  Each fold step copies the
+    accumulated array, so the cost is quadratic in a document's item rows
+    (tens on a receipt)."""
+    rows = F.flatten(
+        F.transform(
+            per_table,
+            lambda t: F.transform(
+                t["rows"],
+                lambda r: F.struct(
+                    t["tpos"].alias("tpos"),
+                    t["subtotal"].alias("subtotal"),
+                    r["section_marker"].alias("marker"),
+                    r["item"].alias("item"),
+                ),
+            ),
+        )
+    )
+    tagged_type = (
+        "array<struct<tpos:int,section_name:string,subtotal:string,"
+        f"item:{tables.item_type()}>>"
+    )
+
+    def step(acc: Column, r: Column) -> Column:
+        name = F.coalesce(r["marker"], acc["name"])
+        tagged = F.struct(
+            r["tpos"].alias("tpos"),
+            name.alias("section_name"),
+            r["subtotal"].alias("subtotal"),
+            r["item"].alias("item"),
+        )
+        return F.struct(
+            name.alias("name"),
+            F.when(r["item"].isNotNull(), F.concat(acc["items"], F.array(tagged)))
+            .otherwise(acc["items"])
+            .alias("items"),
+        )
+
+    zero = F.struct(
+        F.lit(None).cast("string").alias("name"),
+        F.array().cast(tagged_type).alias("items"),
+    )
+    return F.aggregate(rows, zero, step, lambda acc: acc["items"])
+
+
+def _sections(items: Column) -> Column:
+    """Items grouped by (tpos, section_name) in ``array_sort`` order of that
+    pair (a null name sorts first); items keep their row order.  Null, not
+    ``[]``, for a document without items."""
+    keys = F.array_sort(
+        F.array_distinct(
+            F.transform(
+                items,
+                lambda x: F.struct(
+                    x["tpos"].alias("tpos"),
+                    x["section_name"].alias("section_name"),
+                    x["subtotal"].alias("subtotal"),
+                ),
+            )
+        )
+    )
+    sections = F.transform(
+        keys,
+        lambda k: F.struct(
+            k["section_name"].alias("section_name"),
+            k["subtotal"].alias("section_subtotal"),
+            F.transform(
+                F.filter(
+                    items,
+                    lambda x: (x["tpos"] == k["tpos"])
+                    & x["section_name"].eqNullSafe(k["section_name"]),
+                ),
+                lambda x: x["item"],
+            ).alias("items"),
+        ),
+    )
+    return F.when(F.size(items) > 0, sections)
+
+
+def _footer(per_table: Column) -> Column:
+    """First table with an explicit الصافي row (W4 first-occurrence); else
+    net_total_amount = SUM of the section subtotals — 'the only allowed
+    calculation' (A5, pdf_processor.py:165-179) — summed in table order
+    with ``sum``'s null rules."""
+    explicit = F.try_element_at(
+        F.filter(per_table, lambda t: t["footer_try"]["net_total_amount"].isNotNull()),
+        F.lit(1),
+    )["footer_try"]
+    total = F.aggregate(
+        per_table,
+        F.lit(None).cast("double"),
+        lambda acc, t: F.coalesce(
+            F.coalesce(acc, F.lit(0.0)) + textops.coerce_price(t["subtotal"]), acc
+        ),
+    )
+    fallback = F.struct(
+        F.format_number(total, 3).alias("net_total_amount"),
+        F.lit(None).cast("string").alias("paid"),
+        F.lit(None).cast("string").alias("amount_due"),
+    )
+    return F.coalesce(explicit, fallback)
+
+
+@per_session
+def _sections_and_footer(text_col: str) -> Column:
+    """struct(sections, footer) of one document's text, parsed row-locally:
+    every ``<table>`` is tokenized once into its service rows, subtotal and
+    footer candidate, and the sections and the footer are folded from
+    those per-table facts with higher-order functions."""
+    tbl = F.coalesce(
+        F.regexp_extract_all(F.col(text_col), F.lit(_TABLE_RE), 1),
+        F.array().cast("array<string>"),
+    )
+    per_table = F.transform(
+        tbl,
+        lambda html, tpos: F.struct(
+            tpos.alias("tpos"),
+            tables.parse_service_rows(html).alias("rows"),
+            tables.parse_section_subtotal(html).alias("subtotal"),
+            tables.parse_janzour_footer(html).alias("footer_try"),
+        ),
+    )
+    return tables.let(
+        per_table,
+        lambda t: F.struct(
+            tables.let(_tagged_items(t), _sections).alias("sections"),
+            _footer(t).alias("footer"),
+        ),
+    )
+
 
 def extract_sections(doc_text: DataFrame, text_col: str = "text") -> DataFrame:
     """(doc_id, text-with-html-tables) → (doc_id, sections array, footer struct).
 
-    Row-level relational build: explode table rows, tag each item with the
-    nearest preceding section marker (F11's last-non-null window,
-    table_parser.py:26-48), group back per (doc, section), then assemble.
-    Footer: explicit الصافي row wins; else net_total_amount = SUM of section
-    subtotals — 'the only allowed calculation' (A5, pdf_processor.py:165-179).
+    Row-local: one Column per document (:func:`_sections_and_footer`), so
+    the plan has no exchange, window or join.  Sections group a document's
+    items by (table, nearest preceding section marker); the footer is the
+    first explicit الصافي row, else the A5 sum of the section subtotals.
     """
-    tbl = F.regexp_extract_all(F.col(text_col), F.lit(r"(?s)(<table>.*?</table>)"), 1)
-    per_table = (
-        doc_text.select("doc_id", F.posexplode(tbl).alias("tpos", "html"))
-        .withColumn("rows", tables.parse_service_rows(F.col("html")))
-        .withColumn("subtotal", tables.parse_section_subtotal(F.col("html")))
-        .withColumn("footer_try", tables.parse_janzour_footer(F.col("html")))
-    )
-    rows = per_table.select(
-        "doc_id",
-        "tpos",
-        "subtotal",
-        "footer_try",
-        F.posexplode_outer("rows").alias("rpos", "row"),
-    )
-    w = (
-        Window.partitionBy("doc_id")
-        .orderBy("tpos", "rpos")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    rows = rows.withColumn(
-        "section_name", F.last(F.col("row.section_marker"), ignorenulls=True).over(w)
-    )
-    items = rows.filter(F.col("row.item").isNotNull())
-    sections = (
-        items.groupBy("doc_id", "tpos", "subtotal", "section_name")
-        .agg(F.array_sort(F.collect_list(F.struct("rpos", F.col("row.item").alias("it")))).alias("_o"))
-        .select(
-            "doc_id",
-            "tpos",
-            F.struct(
-                F.col("section_name"),
-                F.col("subtotal").alias("section_subtotal"),
-                F.transform("_o", lambda s: s["it"]).alias("items"),
-            ).alias("section"),
-        )
-    )
-    per_doc_sections = sections.groupBy("doc_id").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("tpos", "section"))), lambda s: s["section"]
-        ).alias("sections")
-    )
-    # footer: first table with an explicit الصافي row wins (W4 first-occurrence);
-    # fall back to A5 sum of section subtotals.
-    # ONE per-doc aggregation for both footer facts (r6): the split
-    # footers/subtotal_sum form consumed per_table twice more — each with
-    # its own groupBy exchange and doc-level join, and each re-running the
-    # table tokenization (column pruning limits the re-run to the pruned
-    # parse, but the explode+regex pass repeats).  min_by with a
-    # WHEN-nulled ordering key reproduces the filtered min exactly (null
-    # ordering keys are skipped; all-null → null, same as the old missing
-    # row meeting a left join), and sum skips the null subtotals the old
-    # filter removed.  Two exchanges + one join fewer; identical rows.
-    footer_stats = per_table.groupBy("doc_id").agg(
-        F.min_by(
-            "footer_try",
-            F.when(
-                F.col("footer_try.net_total_amount").isNotNull(), F.col("tpos")
+    return doc_text.select(
+        F.col("doc_id"), _sections_and_footer(text_col).alias("_p")
+    ).select(F.col("doc_id"), *_unpack_sections())
+
+
+@per_session
+def _unpack_sections() -> tuple:
+    """The sections and footer of the ``_p`` struct, read in a projection
+    of their own: ``_p`` is read twice, and the optimizer folds a projection
+    into the one below it only when that evaluates nothing twice."""
+    return F.col("_p.sections"), F.col("_p.footer")
+
+
+@per_session
+def _doc_mode_exprs() -> tuple:
+    """(filter, per-doc mode list, projection electing the mode) of
+    :func:`doc_modes`."""
+
+    def elect(modes: Column) -> Column:
+        counted = F.transform(
+            F.array_distinct(modes),
+            lambda m: F.struct(
+                F.size(F.filter(modes, lambda x: x == m)).alias("n"), m.alias("mode")
             ),
-        ).alias("footer_explicit"),
-        (F.sum(textops.coerce_price(F.col("subtotal"))).cast("double")).alias(
-            "subtotal_sum"
-        ),
-    )
-    out = (
-        doc_text.select("doc_id")
-        .join(per_doc_sections, "doc_id", "left")
-        .join(footer_stats, "doc_id", "left")
-        .select(
-            "doc_id",
-            "sections",
-            F.when(F.col("footer_explicit").isNotNull(), F.col("footer_explicit"))
-            .otherwise(
-                F.struct(
-                    F.when(
-                        F.col("subtotal_sum").isNotNull(),
-                        F.format_number(F.col("subtotal_sum"), 3),
-                    ).alias("net_total_amount"),
-                    F.lit(None).cast("string").alias("paid"),
-                    F.lit(None).cast("string").alias("amount_due"),
-                )
-            )
-            .alias("footer"),
         )
+        return F.array_max(counted)["mode"]
+
+    return (
+        F.col("mode").isNotNull(),
+        F.collect_list("mode").alias("_modes"),
+        (F.col("doc_id"), elect(F.col("_modes")).alias("mode")),
     )
-    return out
 
 
 def doc_modes(spine: DataFrame) -> DataFrame:
     """Per-document canonical mode: the most frequent processed (non-null)
-    span mode, ties broken lexicographically — deterministic.  The reference
-    picks the extraction template per document at the upload route
-    (app/tasks.py:172-178: janzour/safwa → janzour prompt, massara/muasafat →
-    massara prompt); here the routed span modes elect it."""
-    counts = (
-        spine.filter(F.col("mode").isNotNull())
-        .groupBy("doc_id", "mode")
-        .agg(F.count("*").alias("n"))
-    )
-    return counts.groupBy("doc_id").agg(
-        F.max_by("mode", F.struct(F.col("n"), F.col("mode"))).alias("mode")
-    )
+    span mode, ties broken lexicographically (the largest mode wins) —
+    deterministic.  One exchange: the spans' modes are collected per
+    document and counted there.  The reference picks the extraction
+    template per document at the upload route (app/tasks.py:172-178:
+    janzour/safwa → janzour prompt, massara/muasafat → massara prompt);
+    here the routed span modes elect it."""
+    keep, collected, elected = _doc_mode_exprs()
+    return spine.filter(keep).groupBy("doc_id").agg(collected).select(*elected)
 
 
 # Template dispatch (tasks.py:172-178 + the third JSON variant at
@@ -386,6 +470,42 @@ _MODES_IDENTITY = ("idcard", "massara_medicine")
 _MODES_MEDICINE = ("massara_medicine",)
 
 
+@per_session
+def _document_exprs(default_mode: str) -> tuple:
+    """(text projection, null mode, parse projection, output projection) of
+    :func:`extract_documents`."""
+    text = F.array_join(
+        F.transform("spans_out", lambda s: F.coalesce(s["text"], F.lit(""))), "\n"
+    )
+    mode = F.col("mode")
+    body = F.col("text")
+    return (
+        (F.col("doc_id"), text.alias("text")),
+        F.lit(None).cast("string"),
+        (
+            F.col("doc_id"),
+            F.coalesce(mode, F.lit(default_mode)).alias("mode"),
+            body,
+            _sections_and_footer("text").alias("_p"),
+        ),
+        (
+            F.col("doc_id"),
+            mode,
+            F.when(mode.isin(*_MODES_JANZOUR), parse_header_janzour(body)).alias(
+                "header_janzour"
+            ),
+            F.when(mode.isin(*_MODES_MASSARA), parse_header_massara(body)).alias(
+                "header_massara"
+            ),
+            F.when(mode.isin(*_MODES_IDENTITY), parse_idcard(body)).alias("patient_identity"),
+            F.when(mode.isin(*_MODES_MEDICINE), parse_header_medicine(body)).alias(
+                "header_medicine"
+            ),
+            *_unpack_sections(),
+        ),
+    )
+
+
 def extract_documents(
     spans_out: DataFrame,
     modes: DataFrame | None = None,
@@ -393,8 +513,8 @@ def extract_documents(
 ) -> DataFrame:
     """spans_out → canonical extracted documents:
     (doc_id, mode, header_janzour, header_massara, patient_identity,
-    sections, footer) — the Spark equivalent of the reference's
-    GPT-extraction stage (E2) built from the native parsers.
+    header_medicine, sections, footer) — the Spark equivalent of the
+    reference's GPT-extraction stage (E2) built from the native parsers.
 
     Per-mode dispatch: each header family is computed ONLY for documents
     whose elected mode selects it (F.when gates the parse per row — the
@@ -406,38 +526,13 @@ def extract_documents(
                                          variant pdf_processor.py:1409-1414)
     ``modes`` is (doc_id, mode) — typically doc_modes(result.spine); docs
     without a row (all-skipped or text-only) fall back to ``default_mode``
-    (the reference's route-level template default).
+    (the reference's route-level template default).  Sections and footer
+    parse row-locally, so the only exchanges are those of ``modes``.
     """
-    joined = spans_out.select(
-        "doc_id",
-        F.array_join(
-            F.transform("spans_out", lambda s: F.coalesce(s["text"], F.lit(""))), "\n"
-        ).alias("text"),
-    )
+    text, no_mode, parse_cols, out_cols = _document_exprs(default_mode)
+    joined = spans_out.select(*text)
     if modes is not None:
         joined = joined.join(modes, "doc_id", "left")
     else:
-        joined = joined.withColumn("mode", F.lit(None).cast("string"))
-    mode = F.coalesce(F.col("mode"), F.lit(default_mode))
-    secs = extract_sections(joined.select("doc_id", "text"))
-    return (
-        joined.join(secs, "doc_id", "left")
-        .select(
-            "doc_id",
-            mode.alias("mode"),
-            F.when(mode.isin(*_MODES_JANZOUR), parse_header_janzour(F.col("text"))).alias(
-                "header_janzour"
-            ),
-            F.when(mode.isin(*_MODES_MASSARA), parse_header_massara(F.col("text"))).alias(
-                "header_massara"
-            ),
-            F.when(mode.isin(*_MODES_IDENTITY), parse_idcard(F.col("text"))).alias(
-                "patient_identity"
-            ),
-            F.when(
-                mode.isin(*_MODES_MEDICINE), parse_header_medicine(F.col("text"))
-            ).alias("header_medicine"),
-            "sections",
-            "footer",
-        )
-    )
+        joined = joined.withColumn("mode", no_mode)
+    return joined.select(*parse_cols).select(*out_cols)

@@ -36,6 +36,7 @@ from engine.metrics import (
     run_totals_df,
 )
 from engine.routing import route
+from engine.session import per_session
 
 # Conf key selecting salted two-phase reassembly for mega-document skew
 # (spans-per-doc heavy tail).  0 = plain single-phase aggregation; N > 0 =
@@ -60,6 +61,59 @@ class ExtractionResult:
         self.spine.unpersist()
 
 
+def _cols(*names: str) -> tuple:
+    return tuple(F.col(n) for n in names)
+
+
+@per_session
+def _explode_exprs() -> tuple:
+    """(explode projection, flatten projection) of the spans table."""
+    return (
+        (F.col("doc_id"), F.explode("spans").alias("s")),
+        _cols("doc_id", "s.kind", "s.text", "s.media_ref", "s.offset"),
+    )
+
+
+@per_session
+def _media_meta_exprs() -> tuple:
+    """(filter, projection) of the media span metadata."""
+    return (
+        F.col("kind") == "media",
+        _cols("doc_id", "offset", "kind", "media_ref"),
+    )
+
+
+@per_session
+def _row_local_exprs() -> tuple:
+    """(filter, out_text, select list) of :func:`_row_local_branch`."""
+    is_text = F.col("kind") == "text"
+    # kind IS NULL must be matched explicitly: ~isin() evaluates to NULL for
+    # a null kind and a bare filter would drop the span — silently lost.
+    is_bad = F.col("kind").isNull() | ~F.col("kind").isin("text", "media")
+    norm = textops.normalize_span_text(F.coalesce(F.col("text"), F.lit("")))
+    boiler = textops.is_boilerplate(F.col("out_text"))
+    empty = F.col("out_text") == ""
+    return (
+        is_text | is_bad,
+        F.when(is_text, norm),
+        (
+            *_cols("doc_id", "offset", "kind", "media_ref", "out_text"),
+            F.when(is_bad, F.lit("error"))
+            .when(empty, F.lit("skipped"))
+            .when(boiler, F.lit("dropped_boilerplate"))
+            .otherwise(F.lit("kept"))
+            .alias("status"),
+            F.when(is_bad, F.lit("bad_kind"))
+            .when(empty, F.lit("empty"))
+            .when(boiler, F.lit("boilerplate"))
+            .alias("reason"),
+            F.lit(None).cast("double").alias("conf"),
+            F.lit(None).cast("string").alias("mode"),
+            F.lit(None).cast("int").alias("qr_rotation"),
+        ),
+    )
+
+
 def _row_local_branch(ex: DataFrame) -> DataFrame:
     """Text-kind spans (normalize + classify) AND bad-kind spans (P9 input
     hygiene → bad_kind error lineage, J5: never silently filtered) in ONE
@@ -67,32 +121,68 @@ def _row_local_branch(ex: DataFrame) -> DataFrame:
     them into separate filter branches would re-scan the spans table for no
     reason (at 10^12 docs every extra scan of the source table is real I/O).
     Pure Catalyst."""
-    is_text = F.col("kind") == "text"
-    # kind IS NULL must be matched explicitly: ~isin() evaluates to NULL for
-    # a null kind and a bare filter would drop the span — silently lost.
-    is_bad = F.col("kind").isNull() | ~F.col("kind").isin("text", "media")
-    norm = textops.normalize_span_text(F.coalesce(F.col("text"), F.lit("")))
-    df = ex.filter(is_text | is_bad).withColumn("out_text", F.when(is_text, norm))
-    boiler = textops.is_boilerplate(F.col("out_text"))
-    empty = F.col("out_text") == ""
-    return df.select(
-        "doc_id",
-        "offset",
-        "kind",
-        "media_ref",
-        "out_text",
-        F.when(is_bad, F.lit("error"))
-        .when(empty, F.lit("skipped"))
-        .when(boiler, F.lit("dropped_boilerplate"))
-        .otherwise(F.lit("kept"))
-        .alias("status"),
-        F.when(is_bad, F.lit("bad_kind"))
-        .when(empty, F.lit("empty"))
-        .when(boiler, F.lit("boilerplate"))
-        .alias("reason"),
-        F.lit(None).cast("double").alias("conf"),
-        F.lit(None).cast("string").alias("mode"),
-        F.lit(None).cast("int").alias("qr_rotation"),
+    keep, out_text, cols = _row_local_exprs()
+    return ex.filter(keep).withColumn("out_text", out_text).select(*cols)
+
+
+@per_session
+def _media_exprs() -> tuple:
+    """(missing-blob feats default, mode, skip_reason, out_text, select list)
+    of :func:`_media_branch`."""
+    # blob missing entirely → same error lineage path as a corrupt payload
+    feats_or_missing = F.when(F.col("feats").isNotNull(), F.col("feats")).otherwise(
+        F.struct(
+            F.lit(None).cast("string").alias("page_kind"),
+            F.lit(None).cast("array<string>").alias("labels"),
+            F.lit(None).cast("string").alias("title_text"),
+            F.lit(None).cast("array<string>").alias("body_lines"),
+            F.lit(None).cast("boolean").alias("has_qr"),
+            F.lit(None).cast("boolean").alias("qr_rotated"),
+            F.lit(None).cast("int").alias("qr_rotation"),
+            F.lit(None).cast("array<string>").alias("boilerplate"),
+            F.lit(None).cast("double").alias("conf"),
+            F.lit("missing_blob").alias("decode_error"),
+        )
+    )
+    feats = F.col("feats")
+    mode, skip_reason = route(feats)
+    # Region strip (M1-M10 analogue): janzour receipt pages keep the whole page
+    # including the title (janzour_processor.py:61-206); every other processed
+    # mode crops below/around the title & header/footer zones — represented by
+    # the codec as title exclusion + the boilerplate region-lines set.
+    lines = F.when(
+        F.col("mode") == "janzour_receipt",
+        F.concat(F.array(F.coalesce(feats["title_text"], F.lit(""))), feats["body_lines"]),
+    ).otherwise(feats["body_lines"])
+    bp = F.coalesce(feats["boilerplate"], F.array().cast("array<string>"))
+    lines = F.filter(lines, lambda l: ~F.array_contains(bp, l))
+    # join first, then the fused regex normalize (same semantics as the
+    # per-line array chain, but codegen-friendly — see normalize_span_text)
+    out_text = textops.normalize_span_text(F.array_join(lines, "\n"))
+    empty = F.col("skip_reason").isNull() & (F.col("out_text") == "")
+    return (
+        feats_or_missing,
+        mode,
+        skip_reason,
+        F.when(F.col("skip_reason").isNull(), out_text),
+        (
+            *_cols("doc_id", "offset", "kind", "media_ref", "out_text"),
+            F.when(F.col("skip_reason") == "decode_error", F.lit("error"))
+            .when(F.col("skip_reason").isNotNull(), F.lit("skipped"))
+            .when(empty, F.lit("skipped"))
+            .otherwise(F.lit("kept"))
+            .alias("status"),
+            F.when(F.col("skip_reason") == "decode_error", feats["decode_error"])
+            .when(F.col("skip_reason").isNotNull(), F.col("skip_reason"))
+            .when(empty, F.lit("empty"))
+            .alias("reason"),
+            feats["conf"].alias("conf"),
+            F.col("mode"),
+            # per-span rotation lineage (M9): which pages arrived rotated and by
+            # how much — downstream quality dashboards read this off the spine
+            # instead of re-decoding
+            feats["qr_rotation"].alias("qr_rotation"),
+        ),
     )
 
 
@@ -109,9 +199,8 @@ def _media_branch(ex: DataFrame, blobs: DataFrame) -> DataFrame:
     the same plan holds at 10^12 spans (where it runs as an SMJ / bucketed
     join on media_ref).
     """
-    meta = ex.filter(F.col("kind") == "media").select(
-        "doc_id", "offset", "kind", "media_ref"
-    )
+    is_media, meta_cols = _media_meta_exprs()
+    meta = ex.filter(is_media).select(*meta_cols)
     # Decode AT THE SCAN: payload bytes go scan-partition → Arrow UDF → gone;
     # only the decoded features (text-sized) enter the join shuffle (splits
     # sized by spark.sql.files.maxPartitionBytes keep the Arrow stage
@@ -123,70 +212,13 @@ def _media_branch(ex: DataFrame, blobs: DataFrame) -> DataFrame:
     # and skew-free; AQE still re-splits a skewed partition if one appears.
     decoded = decode_blobs(blobs)
     med = meta.hint("SHUFFLE_HASH").join(decoded, "media_ref", "left")
-    # blob missing entirely → same error lineage path as a corrupt payload
-    med = med.withColumn(
-        "feats",
-        F.when(F.col("feats").isNotNull(), F.col("feats")).otherwise(
-            F.struct(
-                F.lit(None).cast("string").alias("page_kind"),
-                F.lit(None).cast("array<string>").alias("labels"),
-                F.lit(None).cast("string").alias("title_text"),
-                F.lit(None).cast("array<string>").alias("body_lines"),
-                F.lit(None).cast("boolean").alias("has_qr"),
-                F.lit(None).cast("boolean").alias("qr_rotated"),
-                F.lit(None).cast("int").alias("qr_rotation"),
-                F.lit(None).cast("array<string>").alias("boilerplate"),
-                F.lit(None).cast("double").alias("conf"),
-                F.lit("missing_blob").alias("decode_error"),
-            )
-        ),
-    )
-
-    mode, skip_reason = route(F.col("feats"))
-    med = med.withColumn("mode", mode).withColumn("skip_reason", skip_reason)
-
-    feats = F.col("feats")
-    # Region strip (M1-M10 analogue): janzour receipt pages keep the whole page
-    # including the title (janzour_processor.py:61-206); every other processed
-    # mode crops below/around the title & header/footer zones — represented by
-    # the codec as title exclusion + the boilerplate region-lines set.
-    lines = F.when(
-        F.col("mode") == "janzour_receipt",
-        F.concat(F.array(F.coalesce(feats["title_text"], F.lit(""))), feats["body_lines"]),
-    ).otherwise(feats["body_lines"])
-    bp = F.coalesce(feats["boilerplate"], F.array().cast("array<string>"))
-    lines = F.filter(lines, lambda l: ~F.array_contains(bp, l))
-    # join first, then the fused regex normalize (same semantics as the
-    # per-line array chain, but codegen-friendly — see normalize_span_text)
-    out_text = textops.normalize_span_text(F.array_join(lines, "\n"))
-
-    med = med.withColumn(
-        "out_text", F.when(F.col("skip_reason").isNull(), out_text)
-    )
-    empty = F.col("skip_reason").isNull() & (F.col("out_text") == "")
-    return med.select(
-        "doc_id",
-        "offset",
-        "kind",
-        "media_ref",
-        "out_text",
-        F.when(F.col("skip_reason") == "decode_error", F.lit("error"))
-        .when(F.col("skip_reason").isNotNull(), F.lit("skipped"))
-        .when(empty, F.lit("skipped"))
-        .otherwise(F.lit("kept"))
-        .alias("status"),
-        F.when(
-            F.col("skip_reason") == "decode_error", feats["decode_error"]
-        )
-        .when(F.col("skip_reason").isNotNull(), F.col("skip_reason"))
-        .when(empty, F.lit("empty"))
-        .alias("reason"),
-        feats["conf"].alias("conf"),
-        "mode",
-        # per-span rotation lineage (M9): which pages arrived rotated and by
-        # how much — downstream quality dashboards read this off the spine
-        # instead of re-decoding
-        feats["qr_rotation"].alias("qr_rotation"),
+    feats, mode, skip_reason, out_text, cols = _media_exprs()
+    return (
+        med.withColumn("feats", feats)
+        .withColumn("mode", mode)
+        .withColumn("skip_reason", skip_reason)
+        .withColumn("out_text", out_text)
+        .select(*cols)
     )
 
 
@@ -202,9 +234,8 @@ def build_spine(
     so there is deliberately no separate repartition knob here (a shuffle
     before the decode would move payload bytes).
     """
-    ex = spans.select("doc_id", F.explode("spans").alias("s")).select(
-        "doc_id", "s.kind", "s.text", "s.media_ref", "s.offset"
-    )
+    explode, flatten = _explode_exprs()
+    ex = spans.select(*explode).select(*flatten)
     # Two scan passes over the spans table total: one for everything
     # row-local (text + bad-kind), one for the media span metadata feeding
     # the features join.  (A single-scan variant would have to push text

@@ -1,16 +1,72 @@
-"""SparkSession factory.
+"""SparkSession factory and the per-session expression cache.
 
 Local-mode settings chosen so the same code is cluster-ready: AQE on (skew join +
 partition coalesce), Arrow enabled for pandas UDFs, shuffle partitions ≈ cores
 (never the 200 default), UTC session timezone so DuckDB-oracle comparisons are
 stable.
+
+:func:`per_session` builds an expression tree once per live SparkContext.
+Every PySpark ``F.*`` call is a Py4J round trip (~0.2-0.3 ms), and the
+receipt path's frames are built from ~10^4 of them, so rebuilding the same
+trees on every query costs more driver time than planning them.  The rules
+for a factory wrapped by it:
+
+- it returns a Column, a list of Columns or a tuple of them (lists come back
+  as tuples, so a caller can never mutate the cached value);
+- it takes only hashable plain values (column names, literals, a run id) as
+  positional arguments — never a DataFrame or a Column, whose identity would
+  key the cache and pin JVM objects.  Every distinct argument tuple stays
+  cached for the session's life, so a value that changes per run (a fresh
+  run id) is better added by the caller, outside the factory;
+- it builds no seeded or nondeterministic expression (``rand``, ``randn``,
+  ``uuid``, ``shuffle``, ``spark_partition_id``): a seeded expression fixes
+  its seed when the Column is built, so a cached one would repeat the same
+  "random" values on every query.  Callers add those next to the cached
+  columns.
 """
 
 from __future__ import annotations
 
+import functools
 import os
+import threading
+import weakref
+from typing import Callable, TypeVar
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+T = TypeVar("T")
+
+# SparkContext → {(factory, args): expression}.  Weak keys: a stopped
+# session's context is dropped with its JVM references, and a new session
+# (a new SparkContext object) starts from an empty cache.
+_EXPRESSIONS: "weakref.WeakKeyDictionary[SparkContext, dict]" = weakref.WeakKeyDictionary()
+_EXPRESSIONS_LOCK = threading.Lock()
+
+
+def per_session(factory: Callable[..., T]) -> Callable[..., T]:
+    """Cache ``factory(*args)`` per live SparkContext (rules in the module
+    docstring).  Concurrent first builds may both run the factory; the first
+    stored value wins, and both trees are identical anyway."""
+
+    @functools.wraps(factory)
+    def cached(*args):
+        sc = SparkContext._active_spark_context
+        if sc is None:
+            return factory(*args)
+        key = (factory, args)
+        with _EXPRESSIONS_LOCK:
+            memo = _EXPRESSIONS.setdefault(sc, {})
+            if key in memo:
+                return memo[key]
+        value = factory(*args)
+        if isinstance(value, list):
+            value = tuple(value)
+        with _EXPRESSIONS_LOCK:
+            return memo.setdefault(key, value)
+
+    return cached
 
 
 def get_spark(

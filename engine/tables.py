@@ -11,8 +11,12 @@ reference (table_parser.py:187-210):
 - janzour 4-column footer: the ``الصافي`` row → net_total_amount/paid/amount_due
   (table_parser.py:147-181);
 - section rows: exactly one non-empty cell, Arabic, no digits
-  (table_parser.py:10-23), associated to following items via a
-  last-non-null window (find_section_for_table, table_parser.py:26-48).
+  (table_parser.py:10-23), associated to following items by a running
+  last-non-null marker over the document's rows (find_section_for_table,
+  table_parser.py:26-48; ``parse.extract_sections``).
+
+Every parser returns one Column per row, so a document's tables parse
+inside one projection — no explode, window, aggregation or join.
 
 Column-position mappings are this engine's documented contract (the
 reference's exact Arabic header orders are prompt-induced and model-dependent;
@@ -58,6 +62,14 @@ KEYS_8 = [
 SUBTOTAL_LIT = "الإجمالي"
 NET_LIT = "الصافي"
 GRAND_TOTAL_LIT = "المبلغ الإجمالي"
+
+
+def let(value: Column, build) -> Column:
+    """``build(value)`` with ``value`` LET-BOUND: evaluated once per row as
+    the lambda argument of a single-element array + transform.  Catalyst
+    does not CSE subexpressions inside when-branches or lambda bodies, so
+    an expression referenced n times there would otherwise run n times."""
+    return F.element_at(F.transform(F.array(value), build), 1)
 
 
 def html_rows(html: Column) -> Column:
@@ -128,7 +140,7 @@ def parse_janzour_footer(html: Column) -> Column:
     net_rows = F.filter(
         html_rows(html), lambda r: F.exists(r, lambda c: c.contains(NET_LIT))
     )
-    return F.element_at(F.transform(F.array(net_rows), build), 1)
+    return let(net_rows, build)
 
 
 def _pad(cells: Column, n: int) -> Column:
@@ -140,7 +152,7 @@ def _pad(cells: Column, n: int) -> Column:
 def _item_struct(cells: Column, keys: list[str]) -> Column:
     """Positional mapping → full ITEM_STRUCT (missing keys → null).
 
-    The padded row is LET-BOUND via a single-element array + transform so the
+    The padded row is LET-BOUND (:func:`let`) so the
     concat/array_repeat/slice chain evaluates once per row, not once per
     field — Catalyst does not CSE subexpressions inside when-branches, and
     the naive form materializes the padded array ~11× per row (measured
@@ -156,7 +168,7 @@ def _item_struct(cells: Column, keys: list[str]) -> Column:
                 fields.append(F.lit(None).cast("string").alias(f))
         return F.struct(*fields)
 
-    return F.element_at(F.transform(F.array(_pad(cells, len(keys))), build), 1)
+    return let(_pad(cells, len(keys)), build)
 
 
 def parse_service_rows(html: Column) -> Column:
@@ -234,11 +246,10 @@ def parse_invoice_table(html: Column) -> Column:
     الإجمالي, or span columns (fewer cells than the header — the colspan-skip
     rule, table_parser.py:119-122) are dropped.
     """
-    # LET-BIND the tokenized rows (single-element array + transform, as in
-    # _item_struct): every `header` reference below would otherwise re-run
+    # LET-BIND the tokenized rows (:func:`let`): every `header` reference below would otherwise re-run
     # the full html_rows regexp tokenization — once per array_position call,
     # per field, per row.
-    return F.element_at(F.transform(F.array(html_rows(html)), _invoice_items), 1)
+    return let(html_rows(html), _invoice_items)
 
 
 def _invoice_items(rows: Column) -> Column:
@@ -297,4 +308,4 @@ def parse_section_subtotal(html: Column) -> Column:
         )
 
     sub_rows = F.filter(html_rows(html), lambda r: _row_has(r, SUBTOTAL_LIT))
-    return F.element_at(F.transform(F.array(sub_rows), build), 1)
+    return let(sub_rows, build)

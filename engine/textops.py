@@ -29,13 +29,6 @@ def clean_field(col: Column) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# F2 — first regex group, multiline (text_utils.py:17-26)
-# ---------------------------------------------------------------------------
-def extract_field(col: Column, pattern: str, group: int = 1) -> Column:
-    return F.regexp_extract(col, pattern, group)
-
-
-# ---------------------------------------------------------------------------
 # F3 — dd.MM.yyyy → yyyy-MM-dd with passthrough on failure (text_utils.py:29-38)
 # ---------------------------------------------------------------------------
 def extract_date_default(col: Column) -> Column:
@@ -121,17 +114,6 @@ _DUP_WORD_RE = r"(?<!\S)(\S+)(?:[ \t]+\1)+(?!\S)"
 
 def dedup_consecutive_words(col: Column) -> Column:
     return F.regexp_replace(col, _DUP_WORD_RE, "$1")
-
-
-# ---------------------------------------------------------------------------
-# W1 — consecutive-duplicate LINE removal (pdf_processor.py:555-566), applied to
-# an array<string> of lines: keep line i iff i==0 or lines[i-1] differs.
-# Pure Catalyst higher-order function — no shuffle, no Python.
-# ---------------------------------------------------------------------------
-def dedup_consecutive_lines(lines_col_name: str) -> Column:
-    return F.expr(
-        f"filter({lines_col_name}, (x, i) -> i = 0 OR x != {lines_col_name}[i-1])"
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -332,3 +332,209 @@ def test_parse_header_medicine_third_variant(spark):
     assert got["insurer_name"] == "شركة الضمان"
     assert got["ward"] == "الجناح الشرقي"
     assert got["room_type"] == "مفردة"
+
+
+# ---------------------------------------------------------------------------
+# Row-local extract_sections against the relational build it replaced
+# ---------------------------------------------------------------------------
+
+
+def _relational_sections(doc_text):
+    """The exploded / windowed / joined build of extract_sections, kept as
+    the oracle of the row-local one: items tagged with the last non-null
+    marker in (tpos, rpos) order, grouped by (tpos, section_name), sorted
+    per document; footer = first explicit الصافي table, else the formatted
+    sum of the coerced subtotals."""
+    from pyspark.sql.window import Window
+
+    from engine import textops
+
+    tbl = F.regexp_extract_all(F.col("text"), F.lit(r"(?s)(<table>.*?</table>)"), 1)
+    per_table = (
+        doc_text.select("doc_id", F.posexplode(tbl).alias("tpos", "html"))
+        .withColumn("rows", tables.parse_service_rows(F.col("html")))
+        .withColumn("subtotal", tables.parse_section_subtotal(F.col("html")))
+        .withColumn("footer_try", tables.parse_janzour_footer(F.col("html")))
+    )
+    rows = per_table.select(
+        "doc_id", "tpos", "subtotal", F.posexplode_outer("rows").alias("rpos", "row")
+    )
+    w = (
+        Window.partitionBy("doc_id")
+        .orderBy("tpos", "rpos")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    rows = rows.withColumn(
+        "section_name", F.last(F.col("row.section_marker"), ignorenulls=True).over(w)
+    )
+    sections = (
+        rows.filter(F.col("row.item").isNotNull())
+        .groupBy("doc_id", "tpos", "subtotal", "section_name")
+        .agg(
+            F.array_sort(
+                F.collect_list(F.struct("rpos", F.col("row.item").alias("it")))
+            ).alias("_o")
+        )
+        .select(
+            "doc_id",
+            "tpos",
+            F.struct(
+                F.col("section_name"),
+                F.col("subtotal").alias("section_subtotal"),
+                F.transform("_o", lambda s: s["it"]).alias("items"),
+            ).alias("section"),
+        )
+        .groupBy("doc_id")
+        .agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("tpos", "section"))),
+                lambda s: s["section"],
+            ).alias("sections")
+        )
+    )
+    footer_stats = per_table.groupBy("doc_id").agg(
+        F.min_by(
+            "footer_try",
+            F.when(F.col("footer_try.net_total_amount").isNotNull(), F.col("tpos")),
+        ).alias("footer_explicit"),
+        F.sum(textops.coerce_price(F.col("subtotal"))).cast("double").alias("subtotal_sum"),
+    )
+    return (
+        doc_text.select("doc_id")
+        .join(sections, "doc_id", "left")
+        .join(footer_stats, "doc_id", "left")
+        .select(
+            "doc_id",
+            "sections",
+            F.when(F.col("footer_explicit").isNotNull(), F.col("footer_explicit"))
+            .otherwise(
+                F.struct(
+                    F.when(
+                        F.col("subtotal_sum").isNotNull(),
+                        F.format_number(F.col("subtotal_sum"), 3),
+                    ).alias("net_total_amount"),
+                    F.lit(None).cast("string").alias("paid"),
+                    F.lit(None).cast("string").alias("amount_due"),
+                )
+            )
+            .alias("footer"),
+        )
+    )
+
+
+def _service_table(*rows):
+    """8-column service table: a header, then each row as given — a str is a
+    section marker row, a (code, amount) pair an item row."""
+    head = "<tr>" + "".join(f"<th>h{i}</th>" for i in range(8)) + "</tr>"
+    body = []
+    for r in rows:
+        if isinstance(r, str):
+            body.append(f"<tr><td>{r}</td>" + "<td></td>" * 7 + "</tr>")
+        else:
+            code, amount = r
+            cells = [code, "خدمة", "01.01.2025", amount, "1", amount, "0", amount]
+            body.append("<tr>" + "".join(f"<td>{c}</td>" for c in cells) + "</tr>")
+    return "<table>" + head + "".join(body) + "</table>"
+
+
+def _subtotal_table(*rows, subtotal):
+    total = "<tr><td></td><td>الإجمالي</td>" + "<td></td>" * 5 + f"<td>{subtotal}</td></tr>"
+    return _service_table(*rows)[: -len("</table>")] + total + "</table>"
+
+
+SECTION_SHAPES = {
+    "no_tables": "plain header text\nno tables at all",
+    "null_text": None,
+    "empty_table": "<table></table>",
+    "header_only": "<table><tr><th>الكود</th><th>الخدمة</th></tr></table>",
+    "footer_before_service": FOOTER_TABLE + "\n" + SERVICE_TABLE_8,
+    "two_sections_one_table": _subtotal_table(
+        "قسم ب", ("B1", "1.0"), "قسم أ", ("A1", "2.0"), ("A2", "3.0"), subtotal="6.000"
+    ),
+    "recurring_section": _service_table(
+        "قسم أ", ("A1", "1.0"), "قسم ب", ("B1", "2.0"), "قسم أ", ("A2", "3.0")
+    ),
+    "carried_into_next_table": _service_table("قسم أ", ("A1", "1.0"))
+    + "\n"
+    + _subtotal_table(("A2", "2.0"), subtotal="2.0"),
+    "unnamed_then_named": _service_table(("N1", "1.0"), "قسم ب", ("B1", "2.0"))
+    + _service_table(("B2", "3.0")),
+    "subtotals_summed": _subtotal_table(("X1", "1.5"), subtotal="1,000.250")
+    + _subtotal_table(("Y1", "2.0"), subtotal="x")
+    + _subtotal_table(("Z1", "2.0"), subtotal="2.125"),
+    "two_footers_first_wins": FOOTER_TABLE
+    + FOOTER_TABLE.replace("295.500", "1.000"),
+    "unknown_width_row": "<table><tr><th>a</th></tr><tr><td>C1</td><td>x</td></tr></table>",
+    **{f"malformed_{k}": v for k, v in MALFORMED_TABLES.items()},
+    "malformed_all": "\n".join(MALFORMED_TABLES.values()),
+}
+
+
+def test_row_local_sections_match_relational_build(spark):
+    df = spark.createDataFrame(list(SECTION_SHAPES.items()), "doc_id: string, text: string")
+    got = {r["doc_id"]: r for r in parse.extract_sections(df).collect()}
+    want = {r["doc_id"]: r for r in _relational_sections(df).collect()}
+    assert set(got) == set(SECTION_SHAPES)
+    for doc_id in SECTION_SHAPES:
+        assert got[doc_id] == want[doc_id], doc_id
+    # the shapes exercise what they are named for
+    assert got["no_tables"]["sections"] is None
+    assert got["empty_table"]["sections"] is None
+    assert [s["section_name"] for s in got["recurring_section"]["sections"]] == ["قسم أ", "قسم ب"]
+    assert [len(s["items"]) for s in got["recurring_section"]["sections"]] == [2, 1]
+    assert [s["section_name"] for s in got["carried_into_next_table"]["sections"]] == [
+        "قسم أ",
+        "قسم أ",
+    ]
+    assert [s["section_name"] for s in got["unnamed_then_named"]["sections"]] == [
+        None,
+        "قسم ب",
+        "قسم ب",
+    ]
+    assert got["footer_before_service"]["footer"]["paid"] == "200.000"
+    assert got["subtotals_summed"]["footer"]["net_total_amount"] == "1,002.375"
+    assert got["two_footers_first_wins"]["footer"]["net_total_amount"] == "295.500"
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_extract_sections_plan_is_row_local(spark):
+    df = spark.createDataFrame(list(SECTION_SHAPES.items()), "doc_id: string, text: string")
+    plan = _plan(parse.extract_sections(df))
+    for node in ("Exchange", "Window", "Join"):
+        assert node not in plan, node
+
+
+def test_extract_documents_plan_exchanges_only_modes(spark, corpus_dfs, tmp_path):
+    from engine.pipeline import run_extraction
+
+    res = run_extraction(spark, *corpus_dfs, run_id="plan")
+    res.spans_out.write.parquet(str(tmp_path / "spans_out"))
+    res.spine.write.parquet(str(tmp_path / "spine"))
+    spans_out = spark.read.parquet(str(tmp_path / "spans_out"))
+    spine = spark.read.parquet(str(tmp_path / "spine"))
+    plan = _plan(parse.extract_documents(spans_out, modes=parse.doc_modes(spine)))
+    assert plan.count("Exchange") == 2, plan  # doc_modes' groupBy + the modes broadcast
+    assert "BroadcastExchange" in plan and "Window" not in plan
+    assert plan.count("Join") == 1 and "BroadcastHashJoin" in plan
+    assert "Exchange" not in _plan(parse.extract_documents(spans_out))
+
+
+def test_doc_modes_tie_break_and_null_modes(spark):
+    spine = spark.createDataFrame(
+        [
+            # tie on count 2: the lexicographically largest mode wins
+            ("t", "janzour"), ("t", "massara"), ("t", "massara"), ("t", "janzour"),
+            ("t", None), ("t", None), ("t", None),
+            # the highest count wins over a larger mode
+            ("c", "massara"), ("c", "idcard"), ("c", "idcard"),
+            # only null modes: no row
+            ("n", None),
+        ],
+        "doc_id: string, mode: string",
+    )
+    got = {r["doc_id"]: r["mode"] for r in parse.doc_modes(spine).collect()}
+    assert got == {"t": "massara", "c": "idcard"}
+    assert _plan(parse.doc_modes(spine)).count("Exchange") == 1
