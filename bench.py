@@ -9,7 +9,7 @@ the bench never measures a broken pipeline (BASELINE.md §3.5).
 
 Env knobs:
   SPARK_GRAFT_SF_DIR   input dir (default /root/testdata/sf0.1)
-  SPARK_GRAFT_CPUS     local[N] parallelism (default 32)
+  SPARK_GRAFT_CPUS     local[N] parallelism (default: local[*], all host cores)
   SPARK_GRAFT_BENCH_DOCS  extraction corpus size override
   SPARK_GRAFT_BENCH_REPEATS  best-of-N repeats per timed unit (default 3)
 """
@@ -218,7 +218,6 @@ def run_bitmap_extraction_bench(spark, n_docs: int) -> dict:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     try:
         sf = float(Path(sf_dir).name.replace("sf", ""))
     except ValueError:
@@ -228,7 +227,9 @@ def main() -> None:
     # Bench sessions pin + pre-touch the JVM heap (steady-state timing; see
     # engine/session.py) — opt-in so dev/test sessions keep lazy heap growth.
     os.environ.setdefault("SPARK_GRAFT_PIN_HEAP", "1")
-    spark = get_spark("bench", cores=cpus)  # shuffle partitions: session default (2x cores)
+    # cores: SPARK_GRAFT_CPUS or local[*]; shuffle partitions: 2x cores
+    spark = get_spark("bench")
+    cpus = spark.sparkContext.defaultParallelism
     builders = {q.name: q.build for q in registry()}
 
     # warm the JVM / python workers / codegen once so the first headline

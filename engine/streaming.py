@@ -326,9 +326,9 @@ def stream_extraction(
         standard Spark concurrent-jobs idiom.  Threads only submit; executors
         still share the same cores, so batch-scale throughput is unchanged
         while the per-micro-batch fixed cost shrinks.  Interleaved A/B
-        (bench/ab_stream.py, pool vs sequential alternating in one process,
-        8 micro-batches): pool wins every paired round — 1.19× best / 1.11×
-        median wall (BENCH/ab_stream_r5.json)."""
+        (BENCH/ab_stream_r5.json: pool vs sequential alternating in one
+        process, 8 micro-batches): pool wins every paired round — 1.19×
+        best / 1.11× median wall."""
         session = batch_df.sparkSession
         spine_dir = os.path.join(out_dir, "spine", f"batch={batch_id}")
         build_spine(session, batch_df, blobs).write.mode("overwrite").parquet(

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from engine.relational import PRIORITY_FLAGSHIP, _local_q, _q, load
+from engine.tables import let
 
 # --- shared corpus augmentation (exact copy + near-dup copy) ---------------
 
@@ -67,16 +68,6 @@ def _augmented(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.unionByName(near).unionByName(exact)
 
 
-def _let(value, build):
-    """LET-BIND ``value`` (a Column) as a lambda variable in ``build``
-    (Column → Column) — the single-element array + transform idiom from
-    engine/tables.py.  Higher-order functions evaluate interpreted, outside
-    codegen subexpression elimination, so any expression referenced inside
-    a lambda body is RE-EVALUATED per element/per use; binding it as the
-    lambda argument evaluates it exactly once per row."""
-    return F.element_at(F.transform(F.array(value), build), 1)
-
-
 # --- shingling: word trigrams, position-ordered -----------------------------
 
 
@@ -84,9 +75,9 @@ def _shingles(df: DataFrame) -> DataFrame:
     """(doc_id, shingle) — distinct word-3-gram shingles per doc.
     Guarded for <3-token docs (Spark's sequence() would run BACKWARDS for a
     negative stop, unlike DuckDB's generate_series which returns empty)."""
-    # token array LET-BOUND (see _let): referenced raw inside the transform
-    # lambda it would re-split the text once per shingle element
-    tri = _let(
+    # token array LET-BOUND (see tables.let): referenced raw inside the
+    # transform lambda it would re-split the text once per shingle element
+    tri = let(
         F.split(F.col("text"), " "),
         lambda toks: F.when(
             F.size(toks) >= 3,
@@ -234,19 +225,19 @@ def minhash_signatures(docs: DataFrame) -> DataFrame:
                         ]
                     )
 
-                return _let(
+                return let(
                     F.transform(t, lambda s: F.md5(F.concat(F.lit("23:"), s))),
                     bands,
                 )
 
-            return _let(
+            return let(
                 F.transform(t, lambda s: F.md5(F.concat(F.lit("01:"), s))),
                 digests,
             )
 
-        return _let(tri, slices)
+        return let(tri, slices)
 
-    sigs = _let(F.split(F.col("text"), " "), band_mins)
+    sigs = let(F.split(F.col("text"), " "), band_mins)
     return docs.filter(F.size(F.split(F.col("text"), " ")) >= 3).select(
         "doc_id", F.posexplode(sigs).alias("band", "sig")
     )
@@ -482,11 +473,12 @@ def connected_components(
       with contraction for the log-diameter bound.  It is NOT run from
       iteration 1 because the common LSH duplicate-cluster graph is
       clique-shaped (diameter ≤ check_every): measured interleaved A/B at
-      sf0.1 (bench/ab_cc.py), unconditional jumping made dedup_components
-      0.78× — two extra narrow shuffles per iteration bought nothing when
-      the fixpoint already lands inside the first window.  Labels are
-      always doc_ids present in the current graph (init = self, min
-      preserves membership), so the self-join always matches.
+      sf0.1 (BENCH/ab_cc_r5.json), unconditional jumping made
+      dedup_components 0.78× — two extra narrow shuffles per iteration
+      bought nothing when the fixpoint already lands inside the first
+      window.  Labels are always doc_ids present in the current graph
+      (init = self, min preserves membership), so the self-join always
+      matches.
     - **Convergence is checked, never assumed**: raises instead of
       returning silently-wrong partial labels for a component whose graph
       diameter exceeds the iteration cap.
@@ -783,7 +775,7 @@ def duplicated_spans(docs: DataFrame, k: int = _SUBSTR_K) -> DataFrame:
     partially duplicated, and the per-doc fan-out stays bounded by doc
     length.  No self-join, no cartesian, payload-free shuffles — linear at
     100 TB where suffix-array ExactSubstr needs a global sort."""
-    grams = _let(
+    grams = let(
         F.split(F.col("text"), " "),
         lambda toks: F.when(
             F.size(toks) >= k,
@@ -915,13 +907,13 @@ def scrub_duplicated_spans(docs: DataFrame, k: int = _SUBSTR_K) -> DataFrame:
             F.array().cast("array<struct<span_start:int,span_end:int>>"),
         ),
     )
-    # The whole output is ONE nested-_let expression (toks bound once, the
+    # The whole output is ONE nested-let expression (toks bound once, the
     # filtered array bound once, scrubbed text bound once) so the HOF filter
     # runs exactly once per row — written as four separate select() columns
     # it was evaluated 5× per row (HOFs get no codegen CSE).
-    out = _let(
+    out = let(
         F.split(F.col("text"), " "),
-        lambda toks: _let(
+        lambda toks: let(
             F.filter(
                 toks,
                 lambda w, i: ~F.exists(
@@ -929,7 +921,7 @@ def scrub_duplicated_spans(docs: DataFrame, k: int = _SUBSTR_K) -> DataFrame:
                     lambda s: (i >= s.span_start) & (i < s.span_end),
                 ),
             ),
-            lambda kept: _let(
+            lambda kept: let(
                 F.concat_ws(" ", kept),
                 lambda scrubbed: F.struct(
                     F.size(kept).alias("kept_tokens"),
@@ -1825,13 +1817,13 @@ def repetition_flags(d: DataFrame) -> DataFrame:
         F.lit(False),
     )
     # ALL five counters come out of ONE let-bound tokenization as a struct,
-    # field-projected in a SECOND select: per-column _let bindings would
+    # field-projected in a SECOND select: per-column let bindings would
     # split the text once per counter (measured: 5 `split(text)` instances
     # in the optimized plan → 1 with this form; CollapseProject does not
     # inline the struct because element_at(transform(...)) is not cheap and
     # is referenced five times).
     names = ("top_bg", "total_bg", "distinct_tg", "total_tg", "max_word_run")
-    counters = _let(
+    counters = let(
         F.split("text", " "),
         lambda w: F.struct(
             *[_rep_counters(w)[name].alias(name) for name in names]
@@ -1848,7 +1840,7 @@ def repetition_flags(d: DataFrame) -> DataFrame:
 
 def _rep_counters(w) -> dict:
     """The per-doc repetition counters as row-local Column expressions over
-    a LET-BOUND word array ``w`` (callers bind F.split("text") via _let —
+    a LET-BOUND word array ``w`` (callers bind F.split("text") via let —
     referenced raw inside the gram lambdas it would re-split the text once
     per gram element) — shared by repetition_flags (materializes all of
     them) and repetition_flag_col (composes just the flag inline, so
@@ -1919,7 +1911,7 @@ def repetition_flag_col():
             F.lit(False),
         )
 
-    return _let(F.split("text", " "), flag)
+    return let(F.split("text", " "), flag)
 
 
 @_q(
@@ -3058,6 +3050,30 @@ def kmeans_assign(
     return assigned
 
 
+def _double_emb(emb: DataFrame) -> DataFrame:
+    """(vec_id, emb) with the float embedding widened to array<double>."""
+    return emb.select(
+        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("emb")
+    )
+
+
+def _nearest_cluster(cents, x):
+    """Row-local argmin of ``x`` over a packed array<struct<cluster, c>>:
+    the cluster minimizing dot(c,c) - 2*dot(x,c) (the ||x||² term is
+    constant per point), ties to the smaller cluster id — array_min over
+    per-centroid (score, cluster) structs.  Cluster ids are unique per
+    packed array, so (s, cluster) already totally orders it."""
+    return F.array_min(
+        F.transform(
+            cents,
+            lambda ct: F.struct(
+                (_dot(ct["c"], ct["c"]) - F.lit(2.0) * _dot(x, ct["c"])).alias("s"),
+                ct["cluster"].alias("cluster"),
+            ),
+        )
+    )["cluster"]
+
+
 def kmeans_fit(
     emb: DataFrame, k: int = _KMEANS_K, iters: int = _KMEANS_ITERS
 ) -> tuple[DataFrame, DataFrame]:
@@ -3089,9 +3105,7 @@ def kmeans_fit(
     assignment step is one broadcast map pass over the corpus — the shape
     SemDeDup-style curation actually runs at scale.
     """
-    e = emb.select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("emb")
-    )
+    e = _double_emb(emb)
     w = Window.orderBy("vec_id")
     cents = (
         e.orderBy("vec_id")
@@ -3109,8 +3123,6 @@ def kmeans_fit(
         # min over a struct containing an array forces SortAggregate (plan
         # receipts + 0.76-0.86× walls at k=4..256 even single-node, where
         # the shuffle is in-process: BENCH/ab_kmeans_k_r5.json).
-        # Ties can't reach the struct's array field: cluster ids are unique
-        # per packed array, so (s, cluster) already totally orders it.
         packed = F.broadcast(
             cents.agg(
                 F.collect_list(
@@ -3118,20 +3130,10 @@ def kmeans_fit(
                 ).alias("cents")
             )
         )
-        best = F.array_min(
-            F.transform(
-                F.col("cents"),
-                lambda ct: F.struct(
-                    (
-                        _dot(ct["c"], ct["c"])
-                        - F.lit(2.0) * _dot(F.col("emb"), ct["c"])
-                    ).alias("s"),
-                    ct["cluster"].alias("cluster"),
-                ),
-            )
-        )
         assigned = e.crossJoin(packed).select(
-            "vec_id", best["cluster"].alias("cluster"), "emb"
+            "vec_id",
+            _nearest_cluster(F.col("cents"), F.col("emb")).alias("cluster"),
+            "emb",
         )
         if step < iters - 1:
             ex = assigned.select("cluster", F.posexplode("emb").alias("pos", "x"))
@@ -3550,11 +3552,45 @@ def train_corpus_semantic_filtered(spark, sf_dir):
 # Knuth-hash samplers; a float mean would differ in ULPs across engines).
 
 
-def _model_token_weight(tok):
-    """Frozen pseudo-weight for one token: md5 → 16-bit bucket → Knuth mix →
+def _token_hash16(tok):
+    """Hashing-trick feature of one token: md5 → its first 16 bits as a
+    bucket id in [0, 65536) — portable arithmetic shared with the DuckDB
+    oracles (DSIR and the LM fold it mod 4096, see _dsir_bucket)."""
+    return F.conv(F.substring(F.md5(tok), 1, 4), 16, 10).cast("long")
+
+
+def _model_weight(bucket):
+    """Frozen pseudo-weight of one 16-bit bucket: Knuth mix →
     centi-basis-points in [-5000, 5000] (zero-mean over buckets)."""
-    h = F.conv(F.substring(F.md5(tok), 1, 4), 16, 10).cast("long")
-    return (h * F.lit(_KNUTH)) % F.lit(2**32) % F.lit(10_001) - F.lit(5_000)
+    return (bucket * F.lit(_KNUTH)) % F.lit(2**32) % F.lit(10_001) - F.lit(5_000)
+
+
+def _token_weight_sums(
+    docs: DataFrame, weights: DataFrame, bucket, sums: dict[str, str]
+) -> DataFrame:
+    """The table-driven scoring operator every hashed-token model shares:
+    tokenize → explode → ``bucket(tok)`` → BROADCAST hash join against the
+    (bucket, weight…) frame → integer per-doc sums, one per ``sums`` entry
+    (output column → weight column), keyed (doc_id, source, n_tokens).
+
+    Plan shape: the corpus side stays exchange-free up to the join (explode
+    and bucket are row-local on the scan; the weight table broadcasts),
+    then ONE exchange of (doc_id, partial_sum) rows for the re-aggregation
+    — map-side partial sums mean the shuffle carries one small row per
+    (doc, reducer), not one per token."""
+    toks = F.split(F.col("text"), " ")
+    return (
+        docs.select(
+            "doc_id",
+            "source",
+            F.size(toks).alias("n_tokens"),
+            F.explode(toks).alias("tok"),
+        )
+        .select("doc_id", "source", "n_tokens", bucket(F.col("tok")).alias("bucket"))
+        .join(F.broadcast(weights), "bucket")
+        .groupBy("doc_id", "source", "n_tokens")
+        .agg(*[F.sum(w).alias(name) for name, w in sums.items()])
+    )
 
 
 def quality_model_score(docs: DataFrame) -> DataFrame:
@@ -3562,7 +3598,7 @@ def quality_model_score(docs: DataFrame) -> DataFrame:
     exchange: the token transform/aggregate runs inside the corpus scan."""
     toks = F.split(F.col("text"), " ")
     sum_w = F.aggregate(
-        F.transform(toks, _model_token_weight),
+        F.transform(toks, lambda t: _model_weight(_token_hash16(t))),
         F.lit(0).cast("long"),
         lambda acc, x: acc + x,
     )
@@ -3599,50 +3635,25 @@ def text_quality_model(spark, sf_dir):
 def quality_model_weights(spark: SparkSession) -> DataFrame:
     """The (bucket → weight) table a LEARNED fastText/LR model ships as —
     65,536 rows (16-bit hashing trick), one integer weight per bucket.
-    Here the weights are the same frozen Knuth-mix pseudo-weights as
-    _model_token_weight, so the join form and the closed form score
+    Here the weights are the same frozen Knuth-mix pseudo-weights
+    (_model_weight) as the closed form, so the two forms score
     identically (locked by test_quality_model_join_matches_closed_form);
     in production this frame is simply replaced by the trained table."""
     return spark.range(65_536).select(
-        F.col("id").alias("bucket"),
-        ((F.col("id") * F.lit(_KNUTH)) % F.lit(2**32) % F.lit(10_001) - F.lit(5_000))
-        .alias("weight"),
+        F.col("id").alias("bucket"), _model_weight(F.col("id")).alias("weight")
     )
 
 
 def quality_model_score_join(docs: DataFrame, weights: DataFrame) -> DataFrame:
     """Broadcast-join form of quality_model_score — the shape a real learned
     model deploys as (the weight table is model output, not an expression):
-    tokenize → explode → 16-bit bucket → BROADCAST hash join against the
-    65k-row weight table → per-doc integer sum.
-
-    Plan shape vs the closed form: the corpus side stays exchange-free up
-    to the join (explode and bucket are row-local on the scan; the weight
-    table broadcasts), then ONE exchange of (doc_id, partial_sum) rows for
-    the re-aggregation — map-side partial sums mean the shuffle carries one
-    small row per (doc, reducer), not one per token.  A/B receipts:
-    BENCH/ab_model_weights_r5.json."""
-    toks = F.split(F.col("text"), " ")
-    ex = docs.select(
-        "doc_id", "source", F.size(toks).alias("n_tokens"), F.explode(toks).alias("tok")
-    ).select(
-        "doc_id",
-        "source",
-        "n_tokens",
-        F.conv(F.substring(F.md5("tok"), 1, 4), 16, 10).cast("long").alias("bucket"),
-    )
-    return (
-        ex.join(F.broadcast(weights), "bucket")
-        .groupBy("doc_id", "source", "n_tokens")
-        .agg(F.sum("weight").alias("score_sum"))
-        .select(
-            "doc_id",
-            "source",
-            "n_tokens",
-            "score_sum",
-            (F.col("score_sum") > 0).alias("kept"),
-        )
-    )
+    the shared _token_weight_sums operator over 16-bit buckets and the
+    65k-row weight table, then the threshold flag.  Versus the closed form
+    it adds exactly one exchange (the per-doc re-aggregation).  A/B
+    receipts: BENCH/ab_model_weights_r5.json."""
+    return _token_weight_sums(
+        docs, weights, _token_hash16, {"score_sum": "weight"}
+    ).withColumn("kept", F.col("score_sum") > 0)
 
 
 # --- DSIR: data selection with importance resampling -------------------------
@@ -3672,20 +3683,17 @@ _DSIR_SCALE = 10_000
 
 
 def _dsir_bucket(tok):
-    """Hashed-unigram feature bucket (md5 → 16 bit → mod 4096) — portable
-    arithmetic shared with the DuckDB oracle."""
-    return F.conv(F.substring(F.md5(tok), 1, 4), 16, 10).cast("long") % F.lit(
-        _DSIR_BUCKETS
-    )
+    """Hashed-unigram feature bucket: the 16-bit token hash mod 4096."""
+    return _token_hash16(tok) % F.lit(_DSIR_BUCKETS)
 
 
-def _dsir_token_counts(docs: DataFrame) -> DataFrame:
-    """(bucket, c) hashed-token counts over a document frame — the
-    bag-of-hashed-ngrams "model fit" (tiny: ≤ 4096 rows out)."""
+def _dsir_token_counts(docs: DataFrame, *keys) -> DataFrame:
+    """(*keys, bucket, c) hashed-token counts over a document frame — the
+    bag-of-hashed-ngrams "model fit" (tiny: ≤ 4096 rows per key out)."""
     return (
-        docs.select(F.explode(F.split(F.col("text"), " ")).alias("tok"))
-        .select(_dsir_bucket(F.col("tok")).alias("bucket"))
-        .groupBy("bucket")
+        docs.select(*keys, F.explode(F.split(F.col("text"), " ")).alias("tok"))
+        .select(*keys, _dsir_bucket(F.col("tok")).alias("bucket"))
+        .groupBy(*keys, "bucket")
         .agg(F.count("*").alias("c"))
     )
 
@@ -3721,17 +3729,10 @@ def dsir_weights(spark: SparkSession, target: DataFrame, raw_sample: DataFrame) 
 
 
 def dsir_score(docs: DataFrame, weights: DataFrame) -> DataFrame:
-    """Per-doc DSIR importance: explode tokens → bucket → BROADCAST join the
-    4096-row weight table → integer per-doc sum (one (doc_id, partial_sum)
-    exchange, map-side combined — the quality_model_score_join plan shape).
-    Adds the deterministic Gumbel resampling key: score + round(1e4 *
-    -ln(-ln(u))) with u the md5-of-string-id uniform (id-type-agnostic)."""
-    toks = F.split(F.col("text"), " ")
-    ex = docs.select(
-        "doc_id", "source", F.size(toks).alias("n_tokens"), F.explode(toks).alias("tok")
-    ).select(
-        "doc_id", "source", "n_tokens", _dsir_bucket(F.col("tok")).alias("bucket")
-    )
+    """Per-doc DSIR importance: the shared _token_weight_sums operator over
+    4096 buckets and the one weight table, plus the deterministic Gumbel
+    resampling key: score + round(1e4 * -ln(-ln(u))) with u the
+    md5-of-string-id uniform (id-type-agnostic)."""
     # id-TYPE-agnostic uniform: md5 of the STRING form of doc_id → 32-bit
     # integer (the numeric Knuth form silently yields NULL keys on string
     # doc_ids — selection would then ignore the scores entirely); +0.5
@@ -3743,18 +3744,9 @@ def dsir_score(docs: DataFrame, weights: DataFrame) -> DataFrame:
         + F.lit(0.5)
     ) / F.lit(float(2**32))
     gumbel = F.round(F.lit(_DSIR_SCALE) * -F.log(-F.log(u)), 0).cast("long")
-    return (
-        ex.join(F.broadcast(weights), "bucket")
-        .groupBy("doc_id", "source", "n_tokens")
-        .agg(F.sum("weight").alias("dsir_score"))
-        .select(
-            "doc_id",
-            "source",
-            "n_tokens",
-            "dsir_score",
-            (F.col("dsir_score") + gumbel).alias("resample_key"),
-        )
-    )
+    return _token_weight_sums(
+        docs, weights, _dsir_bucket, {"dsir_score": "weight"}
+    ).withColumn("resample_key", F.col("dsir_score") + gumbel)
 
 
 def dsir_select(
@@ -3986,7 +3978,15 @@ def pq_encode_fused(
     pq_encode's docstring names; pq_encode remains the oracle-shaped
     reference (its per-subspace assignments fall out of the fits
     themselves).  A/B receipts: BENCH/ab_pq_r5.json."""
-    d_sub = dims // m
+    return _double_emb(emb).crossJoin(F.broadcast(_pq_codebook_row(cents))).select(
+        "vec_id", *[_pq_code(i, dims // m).alias(f"code_{i}") for i in range(m)]
+    )
+
+
+def _pq_codebook_row(cents: list[DataFrame]) -> DataFrame:
+    """The M centroid frames packed into ONE row: cb_0..cb_{m-1}, each an
+    array<struct<cluster, c>> — the broadcast both the fused encode and the
+    ADC ranker read."""
     packed = None
     for i, c in enumerate(cents):
         pi = c.agg(
@@ -3995,27 +3995,14 @@ def pq_encode_fused(
             )
         )
         packed = pi if packed is None else packed.crossJoin(pi)
-    e = emb.select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("emb")
-    )
+    return packed
 
-    def code_col(i: int):
-        sub = F.slice(F.col("emb"), i * d_sub + 1, d_sub)
-        best = F.array_min(
-            F.transform(
-                F.col(f"cb_{i}"),
-                lambda ct: F.struct(
-                    (
-                        _dot(ct["c"], ct["c"]) - F.lit(2.0) * _dot(sub, ct["c"])
-                    ).alias("s"),
-                    ct["cluster"].alias("cluster"),
-                ),
-            )
-        )
-        return best["cluster"].alias(f"code_{i}")
 
-    return e.crossJoin(F.broadcast(packed)).select(
-        "vec_id", *[code_col(i) for i in range(m)]
+def _pq_code(i: int, d_sub: int):
+    """Subspace ``i``'s code of the row's ``emb``: the argmin of its dim
+    slice over the packed codebook ``cb_i``."""
+    return _nearest_cluster(
+        F.col(f"cb_{i}"), F.slice(F.col("emb"), i * d_sub + 1, d_sub)
     )
 
 
@@ -4061,14 +4048,6 @@ def _pq_adc_rank(
     # lineage appears once and the corpus pass computes each candidate's
     # code argmin AND its table lookup in one projection.
     q = emb.filter(F.col("vec_id") == 0)
-    packed = None
-    for i, c in enumerate(cents):
-        pi = c.agg(
-            F.collect_list(F.struct("cluster", F.col("emb").alias("c"))).alias(
-                f"cb_{i}"
-            )
-        )
-        packed = pi if packed is None else packed.crossJoin(pi)
     q_cols = [
         F.transform(
             F.slice("embedding", i * d_sub + 1, d_sub), lambda x: x.cast("double")
@@ -4085,9 +4064,10 @@ def _pq_adc_rank(
             )
         ).alias(f"t_{i}")
 
-    packed = packed.crossJoin(F.broadcast(q.select(*q_cols))).select(
-        *[t_col(i) for i in range(m)],
-        *[F.col(f"cb_{i}") for i in range(m)],
+    packed = (
+        _pq_codebook_row(cents)
+        .crossJoin(F.broadcast(q.select(*q_cols)))
+        .select(*[t_col(i) for i in range(m)], *[F.col(f"cb_{i}") for i in range(m)])
     )
     e = emb.filter(F.col("vec_id") != 0)
     if coarse is not None:
@@ -4096,27 +4076,10 @@ def _pq_adc_rank(
         # BEFORE any argmin or lookup.
         qc = F.broadcast(q.select(F.col(coarse).alias("q_coarse")))
         e = e.crossJoin(qc).filter(F.col(coarse) == F.col("q_coarse"))
-    e = e.select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("emb")
-    )
-
-    def code_col(i: int):
-        sub = F.slice(F.col("emb"), i * d_sub + 1, d_sub)
-        return F.array_min(
-            F.transform(
-                F.col(f"cb_{i}"),
-                lambda ct: F.struct(
-                    (
-                        _dot(ct["c"], ct["c"]) - F.lit(2.0) * _dot(sub, ct["c"])
-                    ).alias("s"),
-                    ct["cluster"].alias("cluster"),
-                ),
-            )
-        )["cluster"]
-
-    score = F.element_at(F.col("t_0"), code_col(0))
+    e = _double_emb(e)
+    score = F.element_at(F.col("t_0"), _pq_code(0, d_sub))
     for i in range(1, m):
-        score = score + F.element_at(F.col(f"t_{i}"), code_col(i))
+        score = score + F.element_at(F.col(f"t_{i}"), _pq_code(i, d_sub))
     return (
         e.crossJoin(F.broadcast(packed))
         .select("vec_id", score.alias("s"))
@@ -4232,7 +4195,7 @@ _LM_T_MIDDLE = 77_900  # below → 'middle'; else 'tail'
 def _lm_pair_keys():
     """Row-local adjacent-bucket pair keys pk = b1·B + b2 over `text` —
     empty for <2-token docs (the sequence() backwards guard, as _shingles)."""
-    return _let(
+    return let(
         F.transform(F.split(F.col("text"), " "), _dsir_bucket),
         lambda bs: F.when(
             F.size(bs) >= 2,
@@ -4244,6 +4207,96 @@ def _lm_pair_keys():
     )
 
 
+def _lm_tables(reference: DataFrame, *keys: str) -> tuple[DataFrame, DataFrame]:
+    """The hashed-bigram model fit on ``reference`` (…keys, text) as its
+    two weight tables: the DENSE unigram table (…keys, bucket, a_w) with
+    a_w = round(1e4·ln(c1 + B)) over a (key groups × 4096) spine, and the
+    sparse bigram table (…keys, pk, c_w) with c_w = round(1e4·ln(c2 + 1))
+    over the seen pairs.  ``keys`` (the group column) is empty for the one
+    pooled model; every scorer form reads its tables from here."""
+    spine = reference.sparkSession.range(_DSIR_BUCKETS).select(
+        F.col("id").alias("bucket")
+    )
+    if keys:
+        spine = reference.select(*keys).distinct().crossJoin(spine)
+    c1 = F.coalesce(F.col("c"), F.lit(0))
+    a_table = spine.join(
+        _dsir_token_counts(reference, *keys), [*keys, "bucket"], "left"
+    ).select(
+        *keys,
+        "bucket",
+        F.round(
+            F.lit(_DSIR_SCALE) * F.log(c1 + F.lit(_DSIR_BUCKETS).cast("double")), 0
+        ).cast("long").alias("a_w"),
+    )
+    c_table = (
+        reference.select(*keys, F.explode(_lm_pair_keys()).alias("pk"))
+        .groupBy(*keys, "pk")
+        .agg(F.count("*").alias("c2"))
+        .select(
+            *keys,
+            "pk",
+            F.round(
+                F.lit(_DSIR_SCALE) * F.log(F.col("c2") + F.lit(1).cast("double")), 0
+            ).cast("long").alias("c_w"),
+        )
+    )
+    return a_table, c_table
+
+
+def _lm_verdict() -> list:
+    """avg_cost + ppl_bucket from the ``lm_cost``/``n_pairs`` columns — the
+    one verdict of the join, grouped and maps forms.  avg_cost is EXACT
+    integer floor division: (lm_cost - pmod(lm_cost, n_pairs)) div n_pairs
+    (a double quotient rounds once |lm_cost| passes 2^53, and a bare `div`
+    truncates toward zero for a negative cost)."""
+    avg = F.expr("(lm_cost - pmod(lm_cost, n_pairs)) div n_pairs")
+    return [
+        avg.alias("avg_cost"),
+        F.when(avg < _LM_T_HEAD, "head")
+        .when(avg < _LM_T_MIDDLE, "middle")
+        .when(avg.isNotNull(), "tail")
+        .alias("ppl_bucket"),
+    ]
+
+
+def _lm_score(
+    corpus: DataFrame, reference: DataFrame, group_col: str | None = None
+) -> DataFrame:
+    """The join-form scorer behind lm_perplexity (one pooled model) and
+    lm_perplexity_grouped (one model per ``group_col`` value, the group
+    riding every weight-table key): explode the corpus pair keys → two
+    BROADCAST joins against _lm_tables → one (doc_id, partial-sum)
+    exchange → _lm_verdict.  Every corpus doc appears; docs without a
+    scored pair (or without their group's model) carry NULLs."""
+    grp = [] if group_col is None else [F.col(group_col).alias("grp")]
+    keys = [] if group_col is None else ["grp"]
+    a_table, c_table = _lm_tables(reference.select(*grp, "text"), *keys)
+    pairs = corpus.select(
+        "doc_id", *grp, F.explode(_lm_pair_keys()).alias("pk")
+    ).select(
+        "doc_id",
+        *keys,
+        "pk",
+        F.floor(F.col("pk") / F.lit(_DSIR_BUCKETS)).cast("long").alias("bucket"),
+    )
+    costs = (
+        pairs.join(F.broadcast(a_table), [*keys, "bucket"])
+        .join(F.broadcast(c_table), [*keys, "pk"], "left")
+        .groupBy("doc_id")
+        .agg(
+            F.count("*").alias("n_pairs"),
+            F.sum(F.col("a_w") - F.coalesce(F.col("c_w"), F.lit(0))).alias("lm_cost"),
+        )
+    )
+    out = ["doc_id", "source"] + ([] if group_col is None else [F.col(group_col)])
+    return (
+        corpus.select(*out)
+        .join(costs, "doc_id", "left")
+        .select(*out, "n_pairs", "lm_cost", *_lm_verdict())
+    )
+
+
 def lm_perplexity(corpus: DataFrame, reference: DataFrame) -> DataFrame:
     """Per-doc LM cost + CCNet bucket: fit the hashed-bigram model on
     ``reference`` (two tiny groupBys → the A/C weight tables), score every
@@ -4251,65 +4304,7 @@ def lm_perplexity(corpus: DataFrame, reference: DataFrame) -> DataFrame:
     BROADCAST joins → one (doc_id, partial-sum) exchange), bucket by fixed
     thresholds.  Every corpus doc appears: <2-token docs carry NULL
     cost/avg and NULL bucket (the repetition_flags explicit-domain rule)."""
-    b = F.lit(_DSIR_BUCKETS)
-    ref_toks = reference.select(
-        F.explode(F.split(F.col("text"), " ")).alias("tok")
-    ).select(_dsir_bucket(F.col("tok")).alias("b1"))
-    a_table = (
-        corpus.sparkSession.range(_DSIR_BUCKETS)
-        .select(F.col("id").alias("b1"))
-        .join(ref_toks.groupBy("b1").agg(F.count("*").alias("c1")), "b1", "left")
-        .select(
-            "b1",
-            F.round(
-                F.lit(_DSIR_SCALE)
-                * F.log(F.coalesce(F.col("c1"), F.lit(0)) + b.cast("double"))
-            , 0).cast("long").alias("a_w"),
-        )
-    )
-    c_table = (
-        reference.select(F.explode(_lm_pair_keys()).alias("pk"))
-        .groupBy("pk")
-        .agg(F.count("*").alias("c2"))
-        .select(
-            "pk",
-            F.round(
-                F.lit(_DSIR_SCALE) * F.log(F.col("c2") + F.lit(1).cast("double")), 0
-            ).cast("long").alias("c_w"),
-        )
-    )
-    pairs = corpus.select("doc_id", F.explode(_lm_pair_keys()).alias("pk")).select(
-        "doc_id", "pk", F.floor(F.col("pk") / b).cast("long").alias("b1")
-    )
-    costs = (
-        pairs.join(F.broadcast(a_table), "b1")
-        .join(F.broadcast(c_table), "pk", "left")
-        .groupBy("doc_id")
-        .agg(
-            F.count("*").alias("n_pairs"),
-            F.sum(F.col("a_w") - F.coalesce(F.col("c_w"), F.lit(0))).alias("lm_cost"),
-        )
-    )
-    # floor division, not `div`: Spark's `div` truncates toward zero while
-    # the DuckDB oracles use `//` (floors) — identical for lm_cost ≥ 0 (the
-    # documented invariant), but sign-agnostic arithmetic keeps oracle
-    # parity even in the >~4e7-tokens-per-bucket stray −1 regime (ADVICE r5)
-    avg = F.floor(F.col("lm_cost") / F.col("n_pairs")).cast("long")
-    return (
-        corpus.select("doc_id", "source")
-        .join(costs, "doc_id", "left")
-        .select(
-            "doc_id",
-            "source",
-            "n_pairs",
-            "lm_cost",
-            avg.alias("avg_cost"),
-            F.when(avg < _LM_T_HEAD, "head")
-            .when(avg < _LM_T_MIDDLE, "middle")
-            .when(avg.isNotNull(), "tail")
-            .alias("ppl_bucket"),
-        )
-    )
+    return _lm_score(corpus, reference)
 
 
 _LM_BUCKET_SQL = f"(('0x' || substr(md5(t), 1, 4))::BIGINT) % {_DSIR_BUCKETS}"
@@ -4568,20 +4563,9 @@ def pq_fit_sampled(
     sample_stratified discipline: no rand(), so task retries and re-runs
     fit IDENTICAL codebooks); encode everything with pq_encode_fused /
     _pq_adc_rank against these frames."""
-    keep = (
-        ((F.col("vec_id") % F.lit(2**31)) * F.lit(_KNUTH)) % F.lit(2**32)
-        % F.lit(10_000)
-        < F.lit(sample_bp)
-    )
-    sample = emb.filter(keep)
-    d_sub = dims // m
-    cents = []
-    for i in range(m):
-        sub = sample.select(
-            "vec_id", F.slice("embedding", i * d_sub + 1, d_sub).alias("embedding")
-        )
-        _, c = kmeans_fit(sub, k=k)
-        cents.append(c)
+    sample = emb.filter(_sample_bucket(F.col("vec_id")) < F.lit(sample_bp))
+    # pq_encode's fit on the sample; its code joins are lazy and never run
+    _, cents = pq_encode(sample, m=m, k=k, dims=dims)
     return cents
 
 
@@ -4680,16 +4664,8 @@ def dsir_scores_multi(
             "weight", f"w_{name}"
         )
         merged = w if merged is None else merged.join(w, "bucket")
-    toks = F.split(F.col("text"), " ")
-    ex = corpus.select(
-        "doc_id", "source", F.size(toks).alias("n_tokens"), F.explode(toks).alias("tok")
-    ).select(
-        "doc_id", "source", "n_tokens", _dsir_bucket(F.col("tok")).alias("bucket")
-    )
-    agg = (
-        ex.join(F.broadcast(merged), "bucket")
-        .groupBy("doc_id", "source", "n_tokens")
-        .agg(*[F.sum(f"w_{n}").alias(f"score_{n}") for n in names])
+    agg = _token_weight_sums(
+        corpus, merged, _dsir_bucket, {f"score_{n}": f"w_{n}" for n in names}
     )
     best = None
     for n in names:
@@ -4791,75 +4767,7 @@ def lm_perplexity_grouped(
     the groups' seen bigrams), still one corpus-side exchange.  Buckets
     use the shared cutoffs; production CCNet derives per-language cutoffs
     the same way the shared ones were derived (COVERAGE.md)."""
-    b = F.lit(_DSIR_BUCKETS)
-    spark = corpus.sparkSession
-    ref_toks = reference.select(
-        F.col(group_col).alias("grp"),
-        F.explode(F.split(F.col("text"), " ")).alias("tok"),
-    ).select("grp", _dsir_bucket(F.col("tok")).alias("b1"))
-    c1 = ref_toks.groupBy("grp", "b1").agg(F.count("*").alias("c1"))
-    spine = (
-        reference.select(F.col(group_col).alias("grp"))
-        .distinct()
-        .crossJoin(spark.range(_DSIR_BUCKETS).select(F.col("id").alias("b1")))
-    )
-    a_table = spine.join(c1, ["grp", "b1"], "left").select(
-        "grp",
-        "b1",
-        F.round(
-            F.lit(_DSIR_SCALE)
-            * F.log(F.coalesce(F.col("c1"), F.lit(0)) + b.cast("double"))
-        , 0).cast("long").alias("a_w"),
-    )
-    c_table = (
-        reference.select(
-            F.col(group_col).alias("grp"), F.explode(_lm_pair_keys()).alias("pk")
-        )
-        .groupBy("grp", "pk")
-        .agg(F.count("*").alias("c2"))
-        .select(
-            "grp",
-            "pk",
-            F.round(
-                F.lit(_DSIR_SCALE) * F.log(F.col("c2") + F.lit(1).cast("double")), 0
-            ).cast("long").alias("c_w"),
-        )
-    )
-    pairs = corpus.select(
-        "doc_id", F.col(group_col).alias("grp"), F.explode(_lm_pair_keys()).alias("pk")
-    ).select(
-        "doc_id", "grp", "pk", F.floor(F.col("pk") / b).cast("long").alias("b1")
-    )
-    costs = (
-        pairs.join(F.broadcast(a_table), ["grp", "b1"])
-        .join(F.broadcast(c_table), ["grp", "pk"], "left")
-        .groupBy("doc_id")
-        .agg(
-            F.count("*").alias("n_pairs"),
-            F.sum(F.col("a_w") - F.coalesce(F.col("c_w"), F.lit(0))).alias("lm_cost"),
-        )
-    )
-    # floor division, not `div`: Spark's `div` truncates toward zero while
-    # the DuckDB oracles use `//` (floors) — identical for lm_cost ≥ 0 (the
-    # documented invariant), but sign-agnostic arithmetic keeps oracle
-    # parity even in the >~4e7-tokens-per-bucket stray −1 regime (ADVICE r5)
-    avg = F.floor(F.col("lm_cost") / F.col("n_pairs")).cast("long")
-    return (
-        corpus.select("doc_id", "source", F.col(group_col))
-        .join(costs, "doc_id", "left")
-        .select(
-            "doc_id",
-            "source",
-            F.col(group_col),
-            "n_pairs",
-            "lm_cost",
-            avg.alias("avg_cost"),
-            F.when(avg < _LM_T_HEAD, "head")
-            .when(avg < _LM_T_MIDDLE, "middle")
-            .when(avg.isNotNull(), "tail")
-            .alias("ppl_bucket"),
-        )
-    )
+    return _lm_score(corpus, reference, group_col)
 
 
 @_local_q(
@@ -4924,7 +4832,8 @@ def text_lm_perplexity_by_lang(spark, sf_dir):
     pd_ = d.withColumn("pred", langid_pred_col())
     return lm_perplexity_grouped(
         pd_, pd_.filter(F.col("doc_id") % 31 == 3), group_col="pred"
-    ).withColumnRenamed("grp", "pred")
+    )
+
 
 def lm_weight_maps(reference: DataFrame) -> DataFrame:
     """The lm_perplexity model packed as ONE row of two maps — a_map
@@ -4935,40 +4844,14 @@ def lm_weight_maps(reference: DataFrame) -> DataFrame:
     join and NO aggregation state: it runs inside a scan, batch or
     STREAMING (where the per-doc sum of the join form would be a stateful
     streaming aggregation)."""
-    b = F.lit(_DSIR_BUCKETS)
-    ref_toks = reference.select(
-        F.explode(F.split(F.col("text"), " ")).alias("tok")
-    ).select(_dsir_bucket(F.col("tok")).alias("b1"))
-    a_row = (
-        reference.sparkSession.range(_DSIR_BUCKETS)
-        .select(F.col("id").alias("b1"))
-        .join(ref_toks.groupBy("b1").agg(F.count("*").alias("c1")), "b1", "left")
-        .select(
-            "b1",
-            F.round(
-                F.lit(_DSIR_SCALE)
-                * F.log(F.coalesce(F.col("c1"), F.lit(0)) + b.cast("double"))
-            , 0).cast("long").alias("a_w"),
-        )
-        .agg(
-            F.map_from_entries(F.collect_list(F.struct("b1", "a_w"))).alias("a_map")
-        )
-    )
-    c_row = (
-        reference.select(F.explode(_lm_pair_keys()).alias("pk"))
-        .groupBy("pk")
-        .agg(F.count("*").alias("c2"))
-        .select(
-            "pk",
-            F.round(
-                F.lit(_DSIR_SCALE) * F.log(F.col("c2") + F.lit(1).cast("double")), 0
-            ).cast("long").alias("c_w"),
-        )
-        .agg(
+    a_table, c_table = _lm_tables(reference)
+    return a_table.agg(
+        F.map_from_entries(F.collect_list(F.struct("bucket", "a_w"))).alias("a_map")
+    ).crossJoin(
+        c_table.agg(
             F.map_from_entries(F.collect_list(F.struct("pk", "c_w"))).alias("c_map")
         )
     )
-    return a_row.crossJoin(c_row)
 
 
 def lm_perplexity_maps(docs: DataFrame, weight_maps: DataFrame) -> DataFrame:
@@ -4979,7 +4862,7 @@ def lm_perplexity_maps(docs: DataFrame, weight_maps: DataFrame) -> DataFrame:
     the maps come from a batch-side fit and enter the stream as a static
     broadcast."""
     b = F.lit(_DSIR_BUCKETS)
-    cost = _let(
+    cost = let(
         _lm_pair_keys(),
         lambda pks: F.when(
             F.size(pks) >= 1,
@@ -4996,28 +4879,8 @@ def lm_perplexity_maps(docs: DataFrame, weight_maps: DataFrame) -> DataFrame:
         F.size(F.split(F.col("text"), " ")) - F.lit(1), F.lit(0)
     )
     n_pairs = F.when(n_pairs_raw >= 1, n_pairs_raw)
-    # floor division, not `div`: Spark's `div` truncates toward zero while
-    # the DuckDB oracles use `//` (floors) — identical for lm_cost ≥ 0 (the
-    # documented invariant), but sign-agnostic arithmetic keeps oracle
-    # parity even in the >~4e7-tokens-per-bucket stray −1 regime (ADVICE r5)
-    avg = F.floor(F.col("lm_cost") / F.col("n_pairs")).cast("long")
     return (
         docs.crossJoin(F.broadcast(weight_maps))
-        .select(
-            "doc_id",
-            "source",
-            n_pairs.alias("n_pairs"),
-            cost.alias("lm_cost"),
-        )
-        .select(
-            "doc_id",
-            "source",
-            "n_pairs",
-            "lm_cost",
-            avg.alias("avg_cost"),
-            F.when(avg < _LM_T_HEAD, "head")
-            .when(avg < _LM_T_MIDDLE, "middle")
-            .when(avg.isNotNull(), "tail")
-            .alias("ppl_bucket"),
-        )
+        .select("doc_id", "source", n_pairs.alias("n_pairs"), cost.alias("lm_cost"))
+        .select("doc_id", "source", "n_pairs", "lm_cost", *_lm_verdict())
     )

@@ -1400,3 +1400,71 @@ def test_lm_maps_form_matches_join_form(spark):
     plan = maps_form._jdf.queryExecution().executedPlan().toString()
     # doc side: no hash exchange (the tiny map-fit subtree has its own)
     assert "Exchange hashpartitioning(doc_id" not in plan
+
+
+def test_lm_avg_cost_is_exact_integer_floor(spark):
+    """avg_cost is exact integer floor division of lm_cost by n_pairs: a
+    cost past 2^53 keeps its low bit (a double quotient rounds it away),
+    and a negative cost (bigram weight above the unigram weight) floors
+    instead of truncating toward zero."""
+    import hashlib
+
+    def bucket(tok):
+        return int(hashlib.md5(tok.encode()).hexdigest()[:4], 16) % 4096
+
+    def pair_keys(text):
+        bs = [bucket(t) for t in text.split(" ")]
+        return [a * 4096 + b for a, b in zip(bs, bs[1:])]
+
+    maps_schema = "a_map map<bigint,bigint>, c_map map<bigint,bigint>"
+    docs = spark.createDataFrame(
+        [(2, "s", "alpha beta"), (3, "s", "alpha beta gamma")],
+        "doc_id long, source string, text string",
+    )
+
+    big = 2**53 + 1
+    wide = spark.createDataFrame([({b: big for b in range(4096)}, {})], maps_schema)
+    out = {r["doc_id"]: r for r in trainops.lm_perplexity_maps(docs, wide).collect()}
+    assert (out[2]["n_pairs"], out[2]["lm_cost"], out[2]["avg_cost"]) == (1, big, big)
+    assert out[3]["n_pairs"] == 2 and out[3]["lm_cost"] == 2 * big
+    assert out[3]["avg_cost"] == out[3]["lm_cost"] // out[3]["n_pairs"] == big
+
+    c_map = {pair_keys("alpha beta")[0]: 5}
+    neg = spark.createDataFrame([({b: 1 for b in range(4096)}, c_map)], maps_schema)
+    out = {r["doc_id"]: r for r in trainops.lm_perplexity_maps(docs, neg).collect()}
+    for doc_id, text in ((2, "alpha beta"), (3, "alpha beta gamma")):
+        pks = pair_keys(text)
+        cost = sum(1 - c_map.get(pk, 0) for pk in pks)
+        assert out[doc_id]["lm_cost"] == cost < 0
+        assert out[doc_id]["avg_cost"] == cost // len(pks)
+        assert out[doc_id]["ppl_bucket"] == "head"
+    assert out[3]["avg_cost"] == -2  # -3 / 2 floors; truncation would give -1
+
+
+# Executed-plan shape of every query served by a shared scorer core:
+# (occurrences of "Exchange", occurrences of "BroadcastHashJoin"), the same
+# at sf0.001, sf0.01 and sf0.1.  The cores are meant to be plan-neutral; a
+# change here is a plan-shape change to review, not a number to update in
+# passing.
+_SCORER_PLAN_SHAPES = {
+    "text_lm_perplexity": (7, 3),
+    "text_lm_perplexity_by_lang": (9, 3),
+    "train_corpus_ccnet": (9, 3),
+    "text_dsir_select": (12, 3),
+    "text_dsir_multi": (23, 6),
+    "train_corpus_dsir": (20, 3),
+    "sim_pq_topk": (31, 0),
+    "sim_ivfpq_topk": (33, 1),
+    "sim_pq_sampled_topk": (31, 0),
+    "text_quality_model": (0, 0),
+}
+
+
+@pytest.mark.parametrize("name", list(_SCORER_PLAN_SHAPES))
+def test_scorer_query_plan_shape_is_pinned(spark, name):
+    plan = (
+        getattr(trainops, name)(spark, SF_DIR)
+        ._jdf.queryExecution().executedPlan().toString()
+    )
+    got = (plan.count("Exchange"), plan.count("BroadcastHashJoin"))
+    assert got == _SCORER_PLAN_SHAPES[name], plan[:3000]
