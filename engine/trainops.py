@@ -375,45 +375,63 @@ def dedup_simhash(spark, sf_dir):
 # completely different evaluation strategy arriving at the same labels.
 
 CHECKPOINT_DIR_CONF = "spark.extraction.checkpointDir"
-
-
-def _reliable_checkpoint(df: DataFrame) -> DataFrame:
-    """checkpoint(eager=True), with the persist-first variant REJECTED by
-    measurement: Spark's reliable checkpoint recomputes the lineage in the
-    file-write job (localCheckpoint doesn't), and the textbook remedy —
-    persist before checkpoint, unpersist after — was tried here and made the
-    curation job 1.9× SLOWER (10k-doc corpus, pinned 8 cores, checkpoint dir
-    set: wall 11.2 → 21.6 s, task-time 46.3 → 68.8 s).  Columnar cache
-    encode of wide text frames costs more than recomputing two n-gram
-    groupBys; same conclusion as run_extraction's persist=False default for
-    the decoded spine.  Recompute-on-write stands as the cheaper side of the
-    trade at every scale tested."""
-    return df.checkpoint(eager=True)
+_CC_CHECK_EVERY = 3  # iterations per truncation + fixpoint test (PLANS.md §5a)
 
 
 def _truncate_lineage(df: DataFrame) -> DataFrame:
     """Materialize a frame that sits at a DAG-diamond fork so each downstream
     consumer reads the result instead of recomputing the shared subtree per
-    action.  Reliable checkpoint when a checkpoint dir is configured (same
-    ``spark.extraction.checkpointDir`` discipline as connected_components —
-    the 100 TB mode, where executor loss must not invalidate the cut);
+    action; also connected_components' truncation at every convergence
+    check.  Reliable checkpoint when a checkpoint dir is configured
+    (``sc.setCheckpointDir`` or the ``spark.extraction.checkpointDir`` conf
+    — the 100 TB mode, where executor loss must not invalidate the cut);
     localCheckpoint only as the dir-less local-run fallback.  Used instead of
     persist(): a cached frame leaks executor memory past the query's
-    lifetime when the callee can't know when consumers finish."""
+    lifetime when the callee can't know when consumers finish.  A caller
+    that does know hands the result to _release."""
     sc = df.sparkSession.sparkContext
     if sc.getCheckpointDir() is None:
         conf_dir = df.sparkSession.conf.get(CHECKPOINT_DIR_CONF, None)
         if conf_dir:
             sc.setCheckpointDir(conf_dir)
-    if sc.getCheckpointDir() is not None:
-        return _reliable_checkpoint(df)
-    return df.localCheckpoint(eager=True)
+    if sc.getCheckpointDir() is None:
+        return df.localCheckpoint(eager=True)
+    # Reliable checkpoint recomputes the lineage in its file-write job
+    # (localCheckpoint doesn't).  The persist-first variant was REJECTED by
+    # measurement: persist before checkpoint, unpersist after, made the
+    # curation job 1.9x SLOWER (10k-doc corpus, pinned 8 cores, checkpoint
+    # dir set: wall 11.2 -> 21.6 s, task-time 46.3 -> 68.8 s).  Columnar
+    # cache encode of wide text frames costs more than recomputing two
+    # n-gram groupBys; same conclusion as run_extraction's persist=False
+    # default for the decoded spine.  Recompute-on-write stands as the
+    # cheaper side of the trade at every scale tested.
+    return df.checkpoint(eager=True)
+
+
+def _release(df: DataFrame) -> None:
+    """Drop the materialization behind a frame returned by _truncate_lineage,
+    found through the frame itself: its logical plan is a LogicalRDD whose
+    rdd IS the checkpointed RDD.  A reliable checkpoint's directory is
+    deleted through the Hadoop FileSystem API (file://, hdfs://, s3a://
+    alike) — Spark's cleaner removes checkpoint files only on driver-side
+    RDD GC, and only with spark.cleaner.referenceTracking.cleanCheckpoints
+    =true.  A localCheckpoint's blocks are unpersisted — they otherwise sit
+    in executor storage memory until GC happens to collect the wrapper.
+    Nothing else on the session is touched, so materializations of
+    concurrent queries on the same session survive."""
+    rdd = df._jdf.queryExecution().logical().rdd()
+    ckpt = rdd.getCheckpointFile()
+    if ckpt.isDefined():
+        sc = df.sparkSession.sparkContext
+        path = sc._jvm.org.apache.hadoop.fs.Path(ckpt.get())
+        path.getFileSystem(sc._jsc.hadoopConfiguration()).delete(path, True)
+    else:
+        rdd.unpersist(False)
 
 
 def connected_components(
     edges: DataFrame,
     max_iterations: int = 24,
-    check_every: int = 3,
     stats: dict | None = None,
 ) -> DataFrame:
     """Connected components over a SYMMETRIC edge list (doc_a, doc_b) →
@@ -421,50 +439,49 @@ def connected_components(
 
     Scale discipline (the 100 TB concerns, addressed explicitly):
 
-    - **Lineage truncation is a RELIABLE checkpoint** when a checkpoint dir
-      is available (``sc.setCheckpointDir`` or the
-      ``spark.extraction.checkpointDir`` conf) — localCheckpoint blocks are
-      executor-local and die with the executor, which on a 1000-executor run
-      of a 15-round loop is a near-certainty; falls back to localCheckpoint
-      only in dir-less local runs.  Superseded materializations are released
-      EITHER way: checkpoint files are deleted through the Hadoop FS API,
-      and superseded localCheckpoint blocks are unpersisted by RDD id — a
-      long loop must not accumulate O(convergence-checks) cached copies in
-      executor storage memory (storage steals from the unified region and
-      shrinks execution memory for every later stage in the session; the r5
-      leak left ~4 blocks per CC run behind).
+    - **Lineage truncation is _truncate_lineage**: a RELIABLE checkpoint
+      when a checkpoint dir is available — localCheckpoint blocks are
+      executor-local and die with the executor, which on a 1000-executor
+      run of a 15-round loop is a near-certainty.  Every superseded
+      materialization is handed to _release as soon as nothing reads it,
+      so a long loop does not accumulate O(convergence-checks) table
+      copies on durable storage or in executor storage memory (storage
+      steals from the unified region and shrinks execution memory for
+      every later stage in the session).  The loop sets no session conf
+      and releases only frames it created, so it is safe beside concurrent
+      queries on the same session.
     - **Driver round-trips run at a cadence**, not per iteration: each
-      ``check_every``-iteration window costs one eager checkpoint job + one
-      convergence-test job instead of two jobs per iteration.
+      ``_CC_CHECK_EVERY``-iteration window costs one eager checkpoint job +
+      one convergence-test job instead of two jobs per iteration.  The
+      cadence is a plan-size control, not a tunable: ``comp`` is referenced
+      2-3× per iteration, so the unmaterialized plan grows geometrically
+      with the window (PLANS.md §5a).
     - **Propagation is ONE equi-join + ONE min-aggregation per iteration**:
       the edge list is checkpointed WITH self-loops, so min(neighbor labels)
-      already includes the node's own label and the old separate
-      left-join-merge step (join + least/coalesce — a third of every
-      iteration's stages) is gone.  Within a window the edges side of the
-      join is an identical subtree each iteration, so ReuseExchange ships
-      it once.
-    - **Convergence is a DIRECT fixpoint test** at each check (r5 design,
-      kept): count docs where some neighbor still offers a smaller label;
-      zero improvements ⇒ labels constant along every edge ⇒ equal to the
-      component min.  The fused-flag and exponential-cadence variants were
-      measured and rejected (PLANS.md §5a) — don\'t retry.
-    - **The graph CONTRACTS at every failed check** (new r6): once a window
-      ends unconverged, the materialized labels become the nodes of a new
-      edge list — distinct (label(a), label(b)) pairs with label(a) ≠
-      label(b) — and the loop continues on that graph, composing the
-      original→label mapping at each contraction.  Every clique, and every
-      chain segment up to ``check_every`` hops, collapses to a point, so
-      both the edge count and the remaining diameter drop by ~the window
-      size per window: the interleaved capstone graph (diameter ~24,
-      organic LSH chains) converges in 6 iterations / 2 windows where flat
-      propagation took 12 / 4, with window 2 running on a ~100-node
-      contracted graph (measured, differential-tested identical labels).
-      Cost: two label joins + a distinct over the already-shuffling slim
-      edge rows, once per failed window — strictly cheaper than the ≥3
-      full-size iterations it replaces.  Graphs that converge inside the
-      first window (the production LSH duplicate-cluster cliques:
-      flagship / dedup_components / incremental all converge at ≤3) never
-      contract and keep their r5 plan shape exactly.
+      already includes the node's own label.  Within a window the edges
+      side of the join is an identical subtree each iteration, so
+      ReuseExchange ships it once.
+    - **Convergence is a DIRECT fixpoint test** at each check: count docs
+      where some neighbor still offers a smaller label; zero improvements ⇒
+      labels constant along every edge ⇒ equal to the component min.  The
+      fused-flag and exponential-cadence variants were measured and
+      rejected (PLANS.md §5a) — don't retry.
+    - **The graph CONTRACTS at every failed check**: once a window ends
+      unconverged, the materialized labels become the nodes of a new edge
+      list — distinct (label(a), label(b)) pairs with label(a) ≠ label(b) —
+      and the loop continues on that graph, composing the original→label
+      mapping at each contraction.  Every clique, and every chain segment
+      up to a window's hops, collapses to a point, so both the edge count
+      and the remaining diameter drop by ~the window size per window: the
+      interleaved capstone graph (diameter ~24, organic LSH chains)
+      converges in 6 iterations / 2 windows where flat propagation took
+      12 / 4, with window 2 running on a ~100-node contracted graph
+      (measured, differential-tested identical labels).  Cost: two label
+      joins + a distinct over the slim edge rows, once per failed window —
+      strictly cheaper than the ≥3 full-size iterations it replaces.
+      Graphs that converge inside the first window (the production LSH
+      duplicate-cluster cliques: flagship / dedup_components / incremental
+      all converge at ≤3) never contract.
     - **Pointer jumping** (``comp ← min(comp, comp[comp])``) turns on
       ADAPTIVELY, after the first convergence check fails: label-
       propagation distance then roughly doubles per iteration on
@@ -472,7 +489,7 @@ def connected_components(
       in 67 rounds with the jump vs 157 without — simulated), and composes
       with contraction for the log-diameter bound.  It is NOT run from
       iteration 1 because the common LSH duplicate-cluster graph is
-      clique-shaped (diameter ≤ check_every): measured interleaved A/B at
+      clique-shaped (diameter ≤ the cadence): measured interleaved A/B at
       sf0.1 (BENCH/ab_cc_r5.json), unconditional jumping made
       dedup_components 0.78× — two extra narrow shuffles per iteration
       bought nothing when the fixpoint already lands inside the first
@@ -483,64 +500,9 @@ def connected_components(
       returning silently-wrong partial labels for a component whose graph
       diameter exceeds the iteration cap.
     """
-    spark = edges.sparkSession
-    sc = spark.sparkContext
-    if sc.getCheckpointDir() is None:
-        conf_dir = spark.conf.get(CHECKPOINT_DIR_CONF, None)
-        if conf_dir:
-            sc.setCheckpointDir(conf_dir)
-    reliable = sc.getCheckpointDir() is not None
-
-    # Superseded materializations are released EXPLICITLY, in both modes.
-    # Reliable: Spark\'s cleaner only removes checkpoint files on driver-side
-    # RDD GC (and only with spark.cleaner.referenceTracking.cleanCheckpoints
-    # =true), so a long loop at the 100 TB scale this targets would
-    # otherwise accumulate O(convergence-checks) full table copies on
-    # durable storage.  Each truncate diffs the app-private checkpoint dir
-    # (setCheckpointDir appends a per-app UUID, so the listing is ours
-    # alone) to learn which rdd-* directory the checkpoint created; when a
-    # newer checkpoint supersedes it, the old directory is removed through
-    # the Hadoop FileSystem API (works for file://, hdfs://, s3a:// alike).
-    # Local: localCheckpoint persists the RDD in executor storage memory and
-    # nothing unpersists it until driver-side GC happens to collect the
-    # wrapper — the same diff-and-release discipline applies to the
-    # persistent-RDD id set instead of the dir listing.
-    def _fs_path(p: str):
-        jpath = sc._jvm.org.apache.hadoop.fs.Path(p)
-        return jpath.getFileSystem(sc._jsc.hadoopConfiguration()), jpath
-
-    def _list_ckpt() -> set:
-        fs, jpath = _fs_path(sc.getCheckpointDir())
-        if not fs.exists(jpath):
-            return set()
-        return {st.getPath().toString() for st in fs.listStatus(jpath)}
-
-    def _persistent_ids() -> set:
-        return {int(k) for k in sc._jsc.getPersistentRDDs().keySet()}
-
-    def _delete(handles: set) -> None:
-        if reliable:
-            for p in handles:
-                fs, jpath = _fs_path(p)
-                fs.delete(jpath, True)
-        else:
-            jmap = sc._jsc.getPersistentRDDs()
-            for rid in handles:
-                jrdd = jmap.get(rid)
-                if jrdd is not None:
-                    jrdd.unpersist(False)
-
-    def truncate(df: DataFrame) -> tuple[DataFrame, set]:
-        if not reliable:
-            before = _persistent_ids()
-            out = df.localCheckpoint(eager=True)
-            return out, _persistent_ids() - before
-        before = _list_ckpt()
-        out = _reliable_checkpoint(df)
-        return out, _list_ckpt() - before
 
     def with_self_loops(e: DataFrame) -> DataFrame:
-        # self-loops make min-over-neighbors include the node\'s own label,
+        # self-loops make min-over-neighbors include the node's own label,
         # fusing the propagate step to one join + one aggregation
         nodes = e.select("doc_a").distinct()
         return e.unionByName(nodes.select("doc_a", F.col("doc_a").alias("doc_b")))
@@ -564,113 +526,94 @@ def connected_components(
             .withColumn("comp", F.col("doc_id"))
         )
 
-    edges, edges_files = truncate(with_self_loops(edges))
-    # Scope the loop's shuffle width to the MATERIALIZED edge count (the
-    # count is one cheap job over the checkpoint): CC rows are two slim id
-    # columns, so the session's payload-sized shuffle width leaves dozens
-    # of near-empty reducers per iteration and the per-stage scheduling
-    # overhead dominates the loop (measured at sf0.1/32c on the capstone
-    # graph: 5.7 s at 64 partitions -> 3.4 s at 1, identical labels).
-    # ~500k edge rows (~25-50 MB) per partition per guide §2.2, capped at
-    # the session default so cluster-scale graphs keep full parallelism;
-    # AQE stays ON (measured 1.8x WORSE without it — its coalescing is
-    # where the tiny-stage savings come from at any width).
-    session_width = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    n_edges = edges.count()
-    loop_width = min(session_width, max(1, n_edges // 500_000 + 1))
-    comp = init_labels(edges)  # lazy: a distinct folded into window 1's plan
-    prev_files: set = set()
-    mapping = None  # original doc_id -> current-graph node, once contracted
-    mapping_files: set = set()
-    iterations = checks = contractions = 0
-    converged = False
-    jump = False
-    spark.conf.set("spark.sql.shuffle.partitions", str(loop_width))
-    try:
-        for it in range(1, max_iterations + 1):
-            # fused propagate: self-loops put the node\'s own label in the min
-            comp = _nb_min(edges, comp).select(
-                F.col("doc_a").alias("doc_id"), F.col("nb_comp").alias("comp")
+    def lift(mapping: DataFrame, labels: DataFrame) -> DataFrame:
+        # relabel mapping targets by the contracted graph's labels; a target
+        # absent from ``labels`` names a component that fully converged
+        # before the contraction that dropped it — its label IS the min.
+        # Both inputs are materialized and superseded by the result.
+        relab = labels.select(
+            F.col("doc_id").alias("m_id"), F.col("comp").alias("m_comp")
+        )
+        lifted = _truncate_lineage(
+            mapping.join(relab, mapping["comp"] == F.col("m_id"), "left").select(
+                "doc_id", F.coalesce(F.col("m_comp"), F.col("comp")).alias("comp")
             )
-            if jump:
-                # pointer jump: adopt my label\'s own label when smaller
-                ptr = comp.select(
-                    F.col("doc_id").alias("p_id"), F.col("comp").alias("p_comp")
+        )
+        _release(mapping)
+        _release(labels)
+        return lifted
+
+    edges = _truncate_lineage(with_self_loops(edges))
+    reliable = edges.sparkSession.sparkContext.getCheckpointDir() is not None
+    comp = init_labels(edges)  # lazy: a distinct folded into window 1's plan
+    mapping = None  # original doc_id -> current-graph node, once contracted
+    iterations = checks = contractions = 0
+    converged = jump = False
+    for it in range(1, max_iterations + 1):
+        # fused propagate: self-loops put the node's own label in the min
+        comp = _nb_min(edges, comp).select(
+            F.col("doc_a").alias("doc_id"), F.col("nb_comp").alias("comp")
+        )
+        if jump:
+            # pointer jump: adopt my label's own label when smaller
+            ptr = comp.select(
+                F.col("doc_id").alias("p_id"), F.col("comp").alias("p_comp")
+            )
+            comp = (
+                comp.alias("c")
+                .join(ptr, F.col("c.comp") == F.col("p_id"), "left")
+                .select(
+                    F.col("c.doc_id").alias("doc_id"),
+                    F.least(
+                        F.col("c.comp"), F.coalesce(F.col("p_comp"), F.col("c.comp"))
+                    ).alias("comp"),
                 )
-                comp = (
-                    comp.alias("c")
-                    .join(ptr, F.col("c.comp") == F.col("p_id"), "left")
-                    .select(
-                        F.col("c.doc_id").alias("doc_id"),
-                        F.least(
-                            F.col("c.comp"), F.coalesce(F.col("p_comp"), F.col("c.comp"))
-                        ).alias("comp"),
-                    )
-                )
-            iterations = it
-            if it % check_every == 0 or it == max_iterations:
-                comp, comp_files = truncate(comp)
-                checks += 1
-                # fixpoint test on the materialized labels: any doc a neighbor
-                # still improves?  (counts only the improving rows — the join is
-                # inner on doc_a, the filter prunes at the probe side)
-                cur = comp.select(
-                    F.col("doc_id").alias("fx_id"), F.col("comp").alias("fx_comp")
-                )
-                improving = (
-                    _nb_min(edges, comp)
-                    .join(cur, F.col("doc_a") == F.col("fx_id"))
-                    .filter(F.col("nb_comp") < F.col("fx_comp"))
-                    .count()
-                )
-                # the previous window\'s checkpoint is now superseded — the new
-                # comp is fully materialized and nothing references the old files
-                _delete(prev_files)
-                prev_files = comp_files
-                if improving == 0:
-                    converged = True
-                    break
-                # still propagating past a full window: assume a deep graph —
-                # engage log-diameter stepping AND contract the graph
-                jump = True
-                if it == max_iterations:
-                    continue  # cap reached; fall through to the raise
-                contractions += 1
-                la = comp.select(F.col("doc_id").alias("a_id"), F.col("comp").alias("la"))
-                lb = comp.select(F.col("doc_id").alias("b_id"), F.col("comp").alias("lb"))
-                contracted = (
-                    edges.join(la, edges["doc_a"] == F.col("a_id"))
-                    .join(lb, edges["doc_b"] == F.col("b_id"))
-                    .filter(F.col("la") != F.col("lb"))
-                    .select(F.col("la").alias("doc_a"), F.col("lb").alias("doc_b"))
-                    .distinct()
-                )
-                edges_new, edges_new_files = truncate(with_self_loops(contracted))
-                # compose the original->current mapping (the just-materialized
-                # labels move DOWN a level: they name the contracted nodes)
-                if mapping is None:
-                    mapping, mapping_files = comp, comp_files
-                    prev_files = set()  # ownership moved to mapping; keep files
-                else:
-                    relab = comp.select(
-                        F.col("doc_id").alias("m_id"), F.col("comp").alias("m_comp")
-                    )
-                    new_map, new_map_files = truncate(
-                        mapping.join(relab, mapping["comp"] == F.col("m_id"), "left")
-                        .select(
-                            "doc_id",
-                            F.coalesce(F.col("m_comp"), F.col("comp")).alias("comp"),
-                        )
-                    )
-                    _delete(mapping_files)
-                    mapping, mapping_files = new_map, new_map_files
-                _delete(edges_files)
-                edges, edges_files = edges_new, edges_new_files
-                comp = init_labels(edges)  # lazy, as at loop start
-                _delete(prev_files)
-                prev_files = set()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", str(session_width))
+            )
+        iterations = it
+        if it % _CC_CHECK_EVERY and it < max_iterations:
+            continue
+        comp = _truncate_lineage(comp)
+        checks += 1
+        # fixpoint test on the materialized labels: any doc a neighbor still
+        # improves?  (counts only the improving rows — the join is inner on
+        # doc_a, the filter prunes at the probe side).  The rows are counted
+        # per partition and summed on the driver: a DataFrame count() plans
+        # one more exchange, to a single partition, and AQE runs it as one
+        # more job per check.
+        cur = comp.select(F.col("doc_id").alias("fx_id"), F.col("comp").alias("fx_comp"))
+        improving = (
+            _nb_min(edges, comp)
+            .join(cur, F.col("doc_a") == F.col("fx_id"))
+            .filter(F.col("nb_comp") < F.col("fx_comp"))
+            ._jdf.rdd()
+            .count()
+        )
+        if improving == 0:
+            converged = True
+            break
+        # still propagating past a full window: assume a deep graph —
+        # engage log-diameter stepping AND contract the graph
+        jump = True
+        if it == max_iterations:
+            break  # cap reached; fall through to the raise
+        contractions += 1
+        la = comp.select(F.col("doc_id").alias("a_id"), F.col("comp").alias("la"))
+        lb = comp.select(F.col("doc_id").alias("b_id"), F.col("comp").alias("lb"))
+        contracted = _truncate_lineage(
+            with_self_loops(
+                edges.join(la, edges["doc_a"] == F.col("a_id"))
+                .join(lb, edges["doc_b"] == F.col("b_id"))
+                .filter(F.col("la") != F.col("lb"))
+                .select(F.col("la").alias("doc_a"), F.col("lb").alias("doc_b"))
+                .distinct()
+            )
+        )
+        # compose the original->current mapping (the just-materialized
+        # labels move DOWN a level: they name the contracted nodes)
+        mapping = comp if mapping is None else lift(mapping, comp)
+        _release(edges)
+        edges = contracted
+        comp = init_labels(edges)  # lazy, as at loop start
     if stats is not None:
         stats.update(
             iterations=iterations,
@@ -686,22 +629,10 @@ def connected_components(
             f"{max_iterations} iterations; labels still propagating"
         )
     if mapping is not None:
-        # lift the contracted labels back to the original nodes; a label
-        # absent from the final graph belongs to a component that fully
-        # converged before the last contraction — its label IS the min
-        relab = comp.select(
-            F.col("doc_id").alias("m_id"), F.col("comp").alias("m_comp")
-        )
-        comp, final_files = truncate(
-            mapping.join(relab, mapping["comp"] == F.col("m_id"), "left").select(
-                "doc_id", F.coalesce(F.col("m_comp"), F.col("comp")).alias("comp")
-            )
-        )
-        _delete(mapping_files)
-        _delete(prev_files)
+        comp = lift(mapping, comp)  # back to the original nodes
     # the returned comp is materialized; the edges checkpoint is no
     # longer referenced by any surviving plan
-    _delete(edges_files)
+    _release(edges)
     return comp
 
 
@@ -2193,20 +2124,15 @@ def curate_interleaved(
     feature rows; the final semi-join ships only kept doc_ids.
 
     The two sides are INDEPENDENT until the final semi-join, and the text
-    side's pre-dedup phases are driver-synchronous (eager label and edge
-    checkpoints), so the media verdicts are materialized from a driver-side
-    worker thread WHILE the label+edge phases run (guide §2.6 — overlap
-    independent jobs so one job's tiny stages back-fill the other's idle
-    cores).  The worker's materialization is BARRIERED (``fut.result()``)
-    before connected_components starts, because the CC loop narrows the
-    session's shuffle width for its own tiny stages — concurrent planning
-    during that window would pick up the narrowed width (a corpus-wide
-    media window planned at a small-graph width is the pathological case
-    at scale).  The materialized frames are slim: the per-ref verdict
-    table (media_ref, n_refs, canonical_ref, is_boilerplate — no
-    payloads, no text) and the symmetric edge list CC would checkpoint
-    anyway.  Measured interleaved A/B at sf0.1/32c: 9.2 → 8.3-8.6 s
-    best-of-3, identical rows."""
+    side is driver-synchronous (eager label and edge checkpoints, then the
+    CC loop's checkpoint and fixpoint jobs), so the media verdicts are
+    materialized from a driver-side worker thread while the text side runs
+    (guide §2.6 — overlap independent jobs so one job's tiny stages
+    back-fill the other's idle cores): the media side overlaps the whole
+    text side, CC included.  The materialized frames are slim: the
+    per-ref verdict table (media_ref, n_refs, canonical_ref,
+    is_boilerplate — no payloads, no text) and the symmetric edge list CC
+    would checkpoint anyway."""
     from concurrent.futures import ThreadPoolExecutor
 
     assembled = assemble_doc_text(exploded).withColumn(
@@ -2216,10 +2142,11 @@ def curate_interleaved(
         groups_fut = pool.submit(
             lambda: _truncate_lineage(media_dedup_features(blob_feats, min_refs))
         )
-        labeled = curation_labeled(assembled)  # eager (default width)
+        labeled = curation_labeled(assembled)  # eager
         edges = _truncate_lineage(curation_edges(labeled))  # eager, heavy chain
-        groups = groups_fut.result()  # barrier: nothing plans during CC below
-    outcomes = curation_verdicts(labeled, connected_components(edges))
+        comp = connected_components(edges)
+        groups = groups_fut.result()
+    outcomes = curation_verdicts(labeled, comp)
     stripped = strip_media_boilerplate(exploded, groups)
     kept = outcomes.filter(F.col("outcome") == "kept").select("doc_id")
     return stripped.join(kept, "doc_id", "semi")

@@ -81,7 +81,7 @@ def test_connected_components_chain_converges_at_cadence(spark, tmp_path):
         sc.setCheckpointDir(str(tmp_path / "cc-ckpt"))
     stats = {}
     comp = trainops.connected_components(
-        _chain_edges(spark, 12), max_iterations=24, check_every=3, stats=stats
+        _chain_edges(spark, 12), max_iterations=24, stats=stats
     )
     labels = {r["doc_id"]: r["comp"] for r in comp.collect()}
     assert labels == {i: 0 for i in range(12)}
@@ -104,11 +104,9 @@ def test_connected_components_chain_converges_at_cadence(spark, tmp_path):
     assert comp.count() == 12
 
 
-def test_connected_components_contraction_differential(spark, tmp_path):
-    """r6 contraction path: a graph deep enough to fail the first window
-    contracts (labels become nodes) and still produces EXACTLY the labels of
-    a reference union-find — including components that fully converge before
-    the last contraction (their label must survive the left-join lift)."""
+def _contraction_graph(spark):
+    """A 200-node graph deep enough to fail the first window, as (symmetric
+    edge frame, union-find reference labels)."""
     import random
 
     rng = random.Random(41)
@@ -130,9 +128,6 @@ def test_connected_components_contraction_differential(spark, tmp_path):
         {"doc_a": b, "doc_b": a} for a, b in pairs
     ]
     edges = spark.createDataFrame(rows, "doc_a: long, doc_b: long")
-    stats: dict = {}
-    comp = trainops.connected_components(edges, max_iterations=24, stats=stats)
-    got = {r["doc_id"]: r["comp"] for r in comp.collect()}
     # reference: plain union-find
     parent = {}
 
@@ -146,9 +141,30 @@ def test_connected_components_contraction_differential(spark, tmp_path):
         ra, rb = find(a), find(b)
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
-    want = {n: find(n) for n in {x for p in pairs for x in p}}
+    return edges, {n: find(n) for n in {x for p in pairs for x in p}}
+
+
+def test_connected_components_contraction_differential(spark, tmp_path):
+    """r6 contraction path: a graph deep enough to fail the first window
+    contracts (labels become nodes) and still produces EXACTLY the labels of
+    a reference union-find — including components that fully converge before
+    the last contraction (their label must survive the left-join lift)."""
+    edges, want = _contraction_graph(spark)
+    stats: dict = {}
+    comp = trainops.connected_components(edges, max_iterations=24, stats=stats)
+    got = {r["doc_id"]: r["comp"] for r in comp.collect()}
     assert got == want
     assert stats["converged"] and stats["contractions"] >= 1
+
+
+def _clear_checkpoint_dir(sc):
+    """Force the dir-less (localCheckpoint) branch on the shared session,
+    where an earlier test may have set a dir (scala: checkpointDir = None) —
+    test-only seam."""
+    if sc.getCheckpointDir() is not None:
+        scala_none = getattr(getattr(sc._jvm.scala, "None$"), "MODULE$")
+        getattr(sc._jsc.sc(), "checkpointDir_$eq")(scala_none)
+        assert sc.getCheckpointDir() is None
 
 
 def test_connected_components_releases_local_checkpoint_blocks(spark):
@@ -158,12 +174,7 @@ def test_connected_components_releases_local_checkpoint_blocks(spark):
     (r5 leaked ~4 blocks per run; over a 3-repeat 17-query bench that
     accumulation squeezed execution memory for every later query)."""
     sc = spark.sparkContext
-    if sc.getCheckpointDir() is not None:
-        # an earlier test set a dir on the shared session; force the
-        # dir-less branch (scala: checkpointDir = None) — test-only seam
-        scala_none = getattr(getattr(sc._jvm.scala, "None$"), "MODULE$")
-        getattr(sc._jsc.sc(), "checkpointDir_$eq")(scala_none)
-        assert sc.getCheckpointDir() is None
+    _clear_checkpoint_dir(sc)
 
     def persistent_ids():
         return {int(k) for k in sc._jsc.getPersistentRDDs().keySet()}
@@ -185,9 +196,54 @@ def test_connected_components_raises_instead_of_partial_labels(spark):
     # pointer jumping covers ~3·2^k hops after k rounds, so forcing
     # non-convergence needs a chain much deeper than the iteration cap
     with pytest.raises(RuntimeError, match="did not converge"):
-        trainops.connected_components(
-            _chain_edges(spark, 64), max_iterations=2, check_every=2
-        )
+        trainops.connected_components(_chain_edges(spark, 64), max_iterations=2)
+
+
+@pytest.mark.parametrize("mode", ["local", "reliable"])
+def test_connected_components_leaves_session_state_alone(spark, tmp_path, mode):
+    """CC shares its session with concurrent queries: while it runs on a
+    worker thread, the main thread must see the session's shuffle width
+    unchanged, and every materialization the main thread takes meanwhile
+    (localCheckpoint blocks, or reliable checkpoint directories) must
+    survive the loop's releases and still read back correctly."""
+    import time
+    from concurrent.futures import ThreadPoolExecutor
+
+    sc = spark.sparkContext
+    if mode == "local":
+        _clear_checkpoint_dir(sc)
+    else:
+        sc.setCheckpointDir(str(tmp_path / "cc-ckpt"))
+    edges, want = _contraction_graph(spark)
+    width = spark.conf.get("spark.sql.shuffle.partitions")
+    widths, mine = set(), []
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        fut = pool.submit(trainops.connected_components, edges)
+        deadline = time.monotonic() + 600
+        while not fut.done() and time.monotonic() < deadline:
+            widths.add(spark.conf.get("spark.sql.shuffle.partitions"))
+            df = spark.range(len(mine) + 1)
+            mine.append(
+                df.localCheckpoint(eager=True)
+                if mode == "local"
+                else df.checkpoint(eager=True)
+            )
+        comp = fut.result(timeout=60)
+    assert widths == {width}
+    assert mine, "no checkpoint was taken while CC ran"
+    persisted = {int(k) for k in sc._jsc.getPersistentRDDs().keySet()}
+    for n, df in enumerate(mine, start=1):
+        rdd = df._jdf.queryExecution().logical().rdd()
+        if mode == "local":
+            assert rdd.id() in persisted, f"frame {n}: blocks released by CC"
+        else:
+            path = rdd.getCheckpointFile().get().removeprefix("file:")
+            assert os.path.isdir(path), f"frame {n}: checkpoint deleted by CC"
+        assert df.count() == n
+    assert {r["doc_id"]: r["comp"] for r in comp.collect()} == want
+    for df in mine:
+        trainops._release(df)
+    _clear_checkpoint_dir(sc)  # later tests run dir-less, as before this one
 
 
 # (test_text_repetition_matches_duckdb_oracle removed round 5:
@@ -1439,6 +1495,22 @@ def test_lm_avg_cost_is_exact_integer_floor(spark):
         assert out[doc_id]["avg_cost"] == cost // len(pks)
         assert out[doc_id]["ppl_bucket"] == "head"
     assert out[3]["avg_cost"] == -2  # -3 / 2 floors; truncation would give -1
+
+
+@pytest.mark.parametrize(
+    "fn",
+    [trainops.text_lm_perplexity, trainops.text_lm_perplexity_by_lang],
+    ids=lambda f: f.__name__,
+)
+def test_lm_cost_is_never_negative_for_a_fitted_model(spark, fn):
+    """Every pair of a fitted model costs a_w - c_w >= 0, because
+    count(pk) <= c1[pk // 4096] < c1 + 4096.  So lm_cost and avg_cost are
+    never negative, and the DuckDB oracles' truncating ``//`` agrees with
+    the engine's floor division on every fitted frame."""
+    rows = fn(spark, SF_DIR).select("lm_cost", "avg_cost").collect()
+    for col in ("lm_cost", "avg_cost"):
+        vals = [r[col] for r in rows if r[col] is not None]
+        assert vals and min(vals) >= 0, col
 
 
 # Executed-plan shape of every query served by a shared scorer core:
