@@ -77,7 +77,18 @@ HEADLINE = [
     "text_dsir_select",
 ]
 
+# Leaves added in r5; every other leaf has been timed the same way since r4,
+# so comparable_subtotal (the total without these) compares across rounds.
+ADDED_R5 = ("train_corpus_filtered", "x_curate_interleaved_spans", "text_dsir_select")
+
 BENCH_SEED = 1234
+
+
+def _compiles(spark) -> int:
+    """Classes compiled by whole-stage/expression codegen so far in this JVM
+    (Spark's CodegenMetrics); read outside every timed region."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
 
 
 def corpus_dir(n_docs: int) -> str:
@@ -107,14 +118,16 @@ def run_extraction_bench(spark, n_docs: int) -> dict:
     cdir = corpus_dir(n_docs)
     spans = spark.read.parquet(f"{cdir}/spans")
     blobs = spark.read.parquet(f"{cdir}/media_blobs")
-    elapsed, out_spans = None, None
+    elapsed, out_spans, compiles = None, None, 0
     for _ in range(REPEATS):  # best-of-N (see headline loop)
+        c0 = _compiles(spark)
         t0 = time.time()
         res = run_extraction(spark, spans, blobs, run_id="bench")
         out_spans = res.spans_out.agg(
             F.count("*").alias("docs"), F.sum(F.size("spans_out")).alias("spans")
         ).collect()[0]
         dt = time.time() - t0
+        compiles += _compiles(spark) - c0
         elapsed = dt if elapsed is None or dt < elapsed else elapsed
     # correctness spot-check on a 20-doc regenerated sample, run through the
     # same code path as ITS OWN tiny job — filtering the full frame would
@@ -140,6 +153,7 @@ def run_extraction_bench(spark, n_docs: int) -> dict:
         "spans_kept": int(out_spans["spans"]),
         "seconds": round(elapsed, 2),
         "docs_per_sec": round(out_spans["docs"] / elapsed, 1),
+        "codegen_compiles": compiles,
     }
 
 
@@ -166,14 +180,16 @@ def run_bitmap_extraction_bench(spark, n_docs: int) -> dict:
     prev = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
     try:
-        elapsed, out = None, None
+        elapsed, out, compiles = None, None, 0
         for _ in range(REPEATS):
+            c0 = _compiles(spark)
             t0 = time.time()
             res = run_extraction(spark, spans, blobs, run_id="bench-bitmap")
             out = res.spans_out.agg(
                 F.count("*").alias("docs"), F.sum(F.size("spans_out")).alias("spans")
             ).collect()[0]
             dt = time.time() - t0
+            compiles += _compiles(spark) - c0
             elapsed = dt if elapsed is None or dt < elapsed else elapsed
         # correctness spot-check vs the spec-driven oracle (intent, no
         # detector code) on a regenerated sample run as its own tiny job —
@@ -213,6 +229,7 @@ def run_bitmap_extraction_bench(spark, n_docs: int) -> dict:
         "spans_kept": int(out["spans"]),
         "seconds": round(elapsed, 2),
         "docs_per_sec": round(out["docs"] / elapsed, 1),
+        "codegen_compiles": compiles,
     }
 
 
@@ -241,6 +258,8 @@ def main() -> None:
 
     burn_before = _host_burn()
     timings: dict[str, float] = {}
+    # classes compiled per leaf, summed over its timed repeats
+    compiles: dict[str, int] = {}
     # best-of-N with INTERLEAVED rounds: this VM's hypervisor noise is
     # BIMODAL and bursty (identical re-runs of a pure-JVM query measured
     # 0.69 s and 2.35 s in one session, with jvm sys-time storms as
@@ -250,18 +269,22 @@ def main() -> None:
     # all of them.
     for _ in range(REPEATS):
         for name in HEADLINE:
+            c0 = _compiles(spark)
             t0 = time.time()
             df = builders[name](spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()
             dt = round(time.time() - t0, 3)
+            compiles[name] = compiles.get(name, 0) + _compiles(spark) - c0
             if name not in timings or dt < timings[name]:
                 timings[name] = dt
 
     ext = run_extraction_bench(spark, n_docs)
     timings["extraction_e2e"] = ext["seconds"]
+    compiles["extraction_e2e"] = ext.pop("codegen_compiles")
 
     ext_bmp = run_bitmap_extraction_bench(spark, max(200, n_docs // 5))
     timings["extraction_bitmap"] = ext_bmp["seconds"]
+    compiles["extraction_bitmap"] = ext_bmp.pop("codegen_compiles")
 
     # canonical-document build (E2 parse layer) over the extracted spans
     from engine.parse import extract_documents
@@ -278,22 +301,27 @@ def main() -> None:
         run_id="bench-docs",
     ).spans_out.write.mode("overwrite").parquet(so_dir)
     spans_out = spark.read.parquet(so_dir)  # isolate parse timing from extraction
-    best = None
+    best, compiles["documents_extract"] = None, 0
     for _ in range(REPEATS):
+        c0 = _compiles(spark)
         t0 = time.time()
         extract_documents(spans_out).write.format("noop").mode("overwrite").save()
         dt = time.time() - t0
+        compiles["documents_extract"] += _compiles(spark) - c0
         best = dt if best is None or dt < best else best
     timings["documents_extract"] = round(best, 3)
 
     total = round(sum(timings.values()), 3)
+    comparable = round(sum(t for n, t in timings.items() if n not in ADDED_R5), 3)
     print(
         json.dumps(
             {
                 "metric": "headline_total_seconds",
                 "value": total,
                 "unit": "sec",
+                "comparable_subtotal": comparable,
                 "queries": timings,
+                "codegen_compiles": compiles,
                 "sf": sf,
                 "extraction": ext,
                 "extraction_bitmap": ext_bmp,

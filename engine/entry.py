@@ -26,6 +26,12 @@ from pyspark.sql.types import BinaryType
 BOILER_SPAN = "Terms of Service | Privacy Policy"
 
 
+# Logical nodes that plan an exchange: a frame holding one is not scan-side.
+_SHUFFLING_NODES = frozenset(
+    {"Aggregate", "Join", "Repartition", "RepartitionByExpression", "Window"}
+)
+
+
 def _spread(df: DataFrame) -> DataFrame:
     """Round-robin repartition of a SLIM frame to the session's core count
     before a payload-synthesis UDF is attached.
@@ -46,7 +52,20 @@ def _spread(df: DataFrame) -> DataFrame:
     spans thousands of splits), so the extra exchange exists only when it
     buys parallelism.  Round-robin (no key) because payloads are pure
     functions of doc_id — placement is free to be uniform; rows-per-task
-    skew is what we are removing."""
+    skew is what we are removing.
+
+    The input must be scan-side (ValueError otherwise): reading the
+    partition count plans the frame as an RDD, and under AQE that runs
+    every shuffle stage below it."""
+    plans = [df._jdf.queryExecution().optimizedPlan()]
+    while plans:
+        plan = plans.pop()
+        if plan.nodeName() in _SHUFFLING_NODES:
+            raise ValueError(
+                f"_spread needs a scan-side frame; its plan has a {plan.nodeName()}"
+            )
+        children = plan.children()
+        plans.extend(children.apply(i) for i in range(children.size()))
     n = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= n:
         return df

@@ -20,6 +20,7 @@ import os
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.util import inheritable_thread_target
 
 from pyspark.sql.types import (
     ArrayType,
@@ -223,7 +224,7 @@ def stream_curate(
 
     Division of labor with the nightly batch chain (the same split as the
     dedup fronts): quality window and Gopher repetition flag are row-local
-    Column expressions — trainops.repetition_flag_col, shared verbatim with
+    Column expressions — trainops.pre_reason_col, shared verbatim with
     the batch chain so a doc gets the SAME verdict at ingest as it would
     overnight — so they run inside the stream's scan with no state at all;
     exact duplicates are dropped within the watermark horizon
@@ -234,15 +235,9 @@ def stream_curate(
     horizon let through.  Output: the surviving (curated-front) docs."""
     from pyspark.sql import functions as F
 
-    from engine.trainops import quality_flag_col, repetition_flag_col
+    from engine.trainops import pre_reason_col
 
-    labeled = doc_stream.withColumn(
-        "pre_reason",
-        F.coalesce(
-            F.when(quality_flag_col(), "quality"),
-            F.when(repetition_flag_col(), "repetition"),
-        ),
-    )
+    labeled = doc_stream.withColumn("pre_reason", pre_reason_col())
     kept = labeled.filter(F.col("pre_reason").isNull()).drop("pre_reason")
     return stream_dedup_exact(kept, watermark=watermark, ts_col=ts_col)
 
@@ -342,9 +337,12 @@ def stream_extraction(
                 os.path.join(out_dir, name, f"batch={batch_id}")
             )
 
+        # Each write inherits the batch's job group and local properties.
+        # Wrapped once per write: the wrapper captures one copy of the
+        # properties, and concurrent SQL executions must not share it.
         with ThreadPoolExecutor(max_workers=4) as pool:
             futures = [
-                pool.submit(write_one, n)
+                pool.submit(inheritable_thread_target(session)(write_one), n)
                 for n in ("spans_out", "lineage", "metrics", "conf_hist")
             ]
             for f in futures:

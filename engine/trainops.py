@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from engine.relational import PRIORITY_FLAGSHIP, _local_q, _q, load
+from engine.session import per_session
 from engine.tables import let
 
 # --- shared corpus augmentation (exact copy + near-dup copy) ---------------
@@ -169,12 +170,21 @@ def minhash_signatures(docs: DataFrame) -> DataFrame:
     (band, sig) so both the delta probe and the within-batch self-join are
     bucket-local (PLANS.md §5 pattern).
 
-    Signature computation is a PURE MAP PASS (see the in-body comment) —
+    Signature computation is a PURE MAP PASS (see _minhash_sig_exprs) —
     the only exchanges left in MinHash dedup are the small (band, sig) rows
     entering the LSH equi-join.  Lineage of the shape: explode-then-group
     (r4) → one groupBy with 4 min-exprs (r5-mid, wall-neutral 6.24 vs
     6.17 s at sf0.1/32c) → row-local array_min (r5-end), which deletes the
     shingle exchange entirely."""
+    keep, sig_rows = _minhash_sig_exprs()
+    return docs.filter(keep).select("doc_id", sig_rows)
+
+
+@per_session
+def _minhash_sig_exprs() -> tuple:
+    """(filter, band-signature generator) of :func:`minhash_signatures`:
+    the docs with at least 3 tokens, and the posexploded (band, sig) rows
+    of one doc's four band minima."""
     # Band minima are ROW-LOCAL: per-band min over one doc's distinct
     # shingle array is an array_min over a transform — no explode, no
     # groupBy, ZERO exchange.  The r4→r5 groupBy form shuffled every
@@ -238,8 +248,9 @@ def minhash_signatures(docs: DataFrame) -> DataFrame:
         return let(tri, slices)
 
     sigs = let(F.split(F.col("text"), " "), band_mins)
-    return docs.filter(F.size(F.split(F.col("text"), " ")) >= 3).select(
-        "doc_id", F.posexplode(sigs).alias("band", "sig")
+    return (
+        F.size(F.split(F.col("text"), " ")) >= 3,
+        F.posexplode(sigs).alias("band", "sig"),
     )
 
 
@@ -982,6 +993,7 @@ def media_dedup_features(blob_feats: DataFrame, min_refs: int = 3) -> DataFrame:
     return _dedup_refs_by_fp(fps, min_refs)
 
 
+@per_session
 def feature_signature_col(feats_col: str = "feats") -> "F.Column":
     """Row-local content signature over a PAGE_FEATURES struct column — the
     near-dup grouping key shared by media_dedup_features (batch) and
@@ -1816,6 +1828,7 @@ def _rep_counters(w) -> dict:
     }
 
 
+@per_session
 def quality_flag_col(min_tokens: int = 10, max_tokens: int = 500):
     """The curation quality window (token count outside [min, max]) as one
     row-local Column over `text` — the single definition the batch chain
@@ -1827,6 +1840,7 @@ def quality_flag_col(min_tokens: int = 10, max_tokens: int = 500):
     return (n < F.lit(min_tokens)) | (n > F.lit(max_tokens))
 
 
+@per_session
 def repetition_flag_col():
     """The Gopher repetition FLAG alone, as one row-local Column over
     `text` — lets a filtering pipeline compute it inline (a withColumn on
@@ -1843,6 +1857,19 @@ def repetition_flag_col():
         )
 
     return let(F.split("text", " "), flag)
+
+
+@per_session
+def pre_reason_col(min_tokens: int = 10, max_tokens: int = 500):
+    """The row-local curation pre-verdict over `text`: "quality" outside the
+    token window, else "repetition" on the Gopher flag, else NULL — the one
+    definition the batch chains, incremental curation and the streaming
+    front share.  Coalesce short-circuits, so quality failures never
+    evaluate the gram expressions."""
+    return F.coalesce(
+        F.when(quality_flag_col(min_tokens, max_tokens), "quality"),
+        F.when(repetition_flag_col(), "repetition"),
+    )
 
 
 @_q(
@@ -1978,20 +2005,11 @@ def curation_labeled(aug: DataFrame) -> DataFrame:
     quality/repetition pre-verdicts (doc_id, source, text, pre_reason) —
     factored out of curation_outcomes (r6) so curate_interleaved can
     overlap this eager phase with its independent media side."""
-    docs = aug.withColumn(
-        "pre_reason", F.when(quality_flag_col(), "quality")
-    )
     # The repetition flag is row-local (repetition_flag_col), so it's a
     # withColumn on the doc frame — the earlier r5 form joined the
     # repetition_flags counters frame back on doc_id, shuffling the full
-    # doc frame for a row-local fact.  CaseWhen short-circuits: quality
-    # failures never evaluate the gram expressions.
-    labeled = docs.withColumn(
-        "pre_reason",
-        F.coalesce(
-            F.col("pre_reason"), F.when(repetition_flag_col(), "repetition")
-        ),
-    )
+    # doc frame for a row-local fact.
+    labeled = aug.withColumn("pre_reason", pre_reason_col())
     # DAG diamond: `labeled` feeds BOTH the dedup branch (survivors →
     # shingles → LSH → CC) and the final outcome join.  Without a lineage
     # cut the quality+repetition subtree re-executes once per branch —
@@ -2135,12 +2153,17 @@ def curate_interleaved(
     would checkpoint anyway."""
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark.util import inheritable_thread_target
+
     assembled = assemble_doc_text(exploded).withColumn(
         "source", F.lit("interleaved")
     )
     with ThreadPoolExecutor(max_workers=1) as pool:
+        # the media jobs carry the caller's job group and local properties
         groups_fut = pool.submit(
-            lambda: _truncate_lineage(media_dedup_features(blob_feats, min_refs))
+            inheritable_thread_target(exploded.sparkSession)(
+                lambda: _truncate_lineage(media_dedup_features(blob_feats, min_refs))
+            )
         )
         labeled = curation_labeled(assembled)  # eager
         edges = _truncate_lineage(curation_edges(labeled))  # eager, heavy chain
@@ -2813,16 +2836,9 @@ def curate_incremental(
     probe join's build side.  Index the kept docs for the next delta with
     ``updated_signature_index`` (a ``kept`` outcome here is exactly a
     ``new`` verdict there)."""
-    docs = new_docs.select("doc_id", "source", "text").withColumn(
-        "pre_reason",
-        F.when(quality_flag_col(min_tokens, max_tokens), "quality"),
-    )
     # row-local flag inline, same as _curation_outcomes — no counters join
-    labeled = docs.withColumn(
-        "pre_reason",
-        F.coalesce(
-            F.col("pre_reason"), F.when(repetition_flag_col(), "repetition")
-        ),
+    labeled = new_docs.select("doc_id", "source", "text").withColumn(
+        "pre_reason", pre_reason_col(min_tokens, max_tokens)
     )
     # same DAG-diamond cut as _curation_outcomes: labeled feeds both the
     # dedup branch and the final outcome join (PLANS.md §4j)
@@ -3427,14 +3443,7 @@ def train_corpus_semantic_filtered(spark, sf_dir):
     as train_corpus_semantic).  Precedence is deterministic: quality ≺
     repetition ≺ semantic-dup ≺ kept."""
     d = load(spark, sf_dir, "documents").select("doc_id", "source", "text")
-    labeled = d.withColumn(
-        "pre_reason", F.when(quality_flag_col(), "quality")
-    ).withColumn(
-        "pre_reason",
-        F.coalesce(
-            F.col("pre_reason"), F.when(repetition_flag_col(), "repetition")
-        ),
-    )
+    labeled = d.withColumn("pre_reason", pre_reason_col())
     # DAG diamond: `labeled` feeds the survivor semi-join AND the final
     # outcome rollup — truncate once (same rationale as curation_outcomes).
     labeled = _truncate_lineage(labeled.select("doc_id", "source", "pre_reason"))

@@ -9,12 +9,14 @@ an inequality-only join condition.
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 import pytest
 
 from engine import entry, trainops
 
 SF_DIR = os.environ.get("SPARK_GRAFT_PARITY_SF", "/root/testdata/sf0.01")
+SF_TINY = str(Path(SF_DIR).with_name("sf0.001"))
 
 _PAIRING_QUERIES = [
     entry.dedup_media_features,
@@ -987,6 +989,69 @@ def test_curate_interleaved_drops_docs_whole_and_strips_media(spark):
     assert "dB" not in by_doc  # quality-dropped doc disappears whole
     assert sorted(by_doc["dA"]) == [("media", "m-a", 1), ("text", None, 0)]
     assert sorted(by_doc["dC"]) == [("text", None, 0)]  # media was boilerplate
+
+
+def _run_capstone(spark) -> None:
+    entry.x_curate_interleaved_spans(spark, SF_TINY).write.format("noop").mode(
+        "overwrite"
+    ).save()
+
+
+def _clear_job_group(sc) -> None:
+    for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+        sc.setLocalProperty(key, None)
+
+
+def test_curate_interleaved_jobs_carry_the_callers_job_group(spark):
+    """Every job of the capstone, the media worker thread's included, runs
+    under the caller's job group, so cancelling or profiling the group
+    reaches all of them."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("capstone-group", "job group inheritance")
+    try:
+        _run_capstone(spark)
+    finally:
+        _clear_job_group(sc)
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()
+    assert tracker.getJobIdsForGroup("capstone-group")
+
+
+def test_warm_capstone_run_compiles_no_classes(spark):
+    """The codegen cache holds the capstone's working set: after two runs,
+    a warm run compiles no class.  AQE numbers whole-stage codegen stages in
+    the order it plans them and the class source carries that number, so a
+    run whose concurrent stages finish in another order renumbers, and
+    recompiles, a few classes (2-14 seen); up to three warm runs are tried.
+    At Spark's default cap of 100 entries every warm run recompiled 54."""
+    compiled = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    for _ in range(2):
+        _run_capstone(spark)
+    counts = []
+    while len(counts) < 3 and 0 not in counts:
+        before = compiled.getCount()
+        _run_capstone(spark)
+        counts.append(compiled.getCount() - before)
+    assert counts[-1] == 0, counts
+
+
+def test_spread_refuses_a_shuffled_frame_without_running_it(spark):
+    """_spread reads the partition count of scan-side frames only: a grouped
+    frame raises before any job runs, and a scan-side frame passes."""
+    from pyspark.sql import functions as F
+
+    sc = spark.sparkContext
+    grouped = spark.range(100).groupBy((F.col("id") % 7).alias("k")).count()
+    sc.setJobGroup("spread-probe", "scan-side check")
+    try:
+        with pytest.raises(ValueError, match="Aggregate"):
+            entry._spread(grouped)
+    finally:
+        _clear_job_group(sc)
+    assert list(sc.statusTracker().getJobIdsForGroup("spread-probe")) == []
+    scan = spark.range(100).filter(F.col("id") > 3).select("id")
+    assert entry._spread(scan).count() == 96
 
 
 def test_semdedup_plan_pair_join_is_cluster_equi(spark):
