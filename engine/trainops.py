@@ -3,7 +3,9 @@ deduplication (exact, MinHash-LSH, n-gram Jaccard, SimHash), similarity search
 (brute-force cosine top-k, IVF/label-bucketed variant), and text analysis
 (language-ID, quality scoring, token counting, fingerprinting).
 
-All pure Catalyst (array higher-order functions, md5, windows) — no UDFs.
+All pure Catalyst (array higher-order functions, md5, windows) — no UDFs;
+the one Python hop is connected_components' small-graph finish (one
+mapInArrow task, numpy/pyarrow).
 Each query has a DuckDB oracle; hash-portability notes:
 - signatures/fingerprints use md5 (identical lowercase hex on both engines),
   never engine-native hash();
@@ -21,6 +23,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.observation import Observation
+from pyspark.sql.types import StructField, StructType
 from pyspark.sql.window import Window
 
 from engine.relational import PRIORITY_FLAGSHIP, _local_q, _q, load
@@ -387,6 +391,11 @@ def dedup_simhash(spark, sf_dir):
 
 CHECKPOINT_DIR_CONF = "spark.extraction.checkpointDir"
 _CC_CHECK_EVERY = 3  # iterations per truncation + fixpoint test (PLANS.md §5a)
+# Edge rows (self-loops included) at or below which one task labels the whole
+# graph instead of the loop.  On 4 cores one task won at every size measured,
+# 12k-4.9M rows, so the crossover lies above them; the bound stops where a
+# single Python worker still holds the graph in ~250 MB (PLANS.md §4u).
+_CC_LOCAL_EDGES = 1_000_000
 
 
 def _truncate_lineage(df: DataFrame) -> DataFrame:
@@ -440,6 +449,58 @@ def _release(df: DataFrame) -> None:
         rdd.unpersist(False)
 
 
+def _truncate_counted(df: DataFrame, rows: list[int]) -> DataFrame:
+    """_truncate_lineage, appending the frame's row count to ``rows``: an
+    observe() metric filled by the truncation's own job, so no count job."""
+    obs = Observation()
+    out = _truncate_lineage(df.observe(obs, F.count(F.lit(1)).alias("rows")))
+    rows.append(obs.get["rows"])
+    return out
+
+
+def _component_roots(src, dst, n: int):
+    """Smallest node of each node's component, over ``n`` nodes numbered
+    0..n-1 and an edge list of node numbers (numpy arrays).  Hook and
+    compress: every tree root on an edge across two trees hooks onto the
+    smaller root across it, then every tree collapses to a star.  Each round
+    removes at least one root, and parent[x] ≤ x always holds, so no cycle
+    forms; edges inside one tree are dropped for good."""
+    import numpy as np
+
+    parent = np.arange(n)
+    while True:
+        ru, rv = parent[src], parent[dst]
+        live = ru != rv
+        if not live.any():
+            return parent
+        src, dst, ru, rv = src[live], dst[live], ru[live], rv[live]
+        np.minimum.at(parent, np.maximum(ru, rv), np.minimum(ru, rv))
+        while not np.array_equal(grand := parent[parent], parent):
+            parent = grand
+
+
+def _label_in_one_task(batches):
+    """mapInArrow body of connected_components' small-graph finish: the
+    whole (doc_a, doc_b) edge list in one task → (doc_id, comp).  Nodes are
+    numbered in the id column's own order (Arrow compares strings bytewise,
+    as Spark does, and int64 exactly), so the smallest number in a component
+    is its min doc_id."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    batches = list(batches)
+    n = sum(b.num_rows for b in batches)
+    if n == 0:
+        return
+    table = pa.Table.from_batches(batches)
+    ids = pa.chunked_array(table["doc_a"].chunks + table["doc_b"].chunks).combine_chunks()
+    nodes = pc.unique(ids)
+    nodes = nodes.take(pc.sort_indices(nodes))
+    code = pc.index_in(ids, value_set=nodes).to_numpy()
+    roots = _component_roots(code[:n], code[n:], len(nodes))
+    yield pa.RecordBatch.from_arrays([nodes, nodes.take(roots)], names=["doc_id", "comp"])
+
+
 def connected_components(
     edges: DataFrame,
     max_iterations: int = 24,
@@ -450,6 +511,17 @@ def connected_components(
 
     Scale discipline (the 100 TB concerns, addressed explicitly):
 
+    - **A small graph finishes in one task.**  The edge list is counted by
+      an observe() metric on its own truncation job, and each contracted
+      edge list likewise.  At or below ``_CC_LOCAL_EDGES`` rows (self-loops
+      included) one single-partition mapInArrow labels the graph by
+      hook-and-compress union-find in numpy, comparing ids in their own
+      type; its result is truncated and composed with the contraction
+      mapping exactly as the loop's labels are.  The loop below runs only
+      while the graph is larger, and hands over once a contraction brings
+      it down to the bound.  Above the bound one worker's memory and time
+      would grow with the graph, while the loop's spread across the
+      cluster (sizing: PLANS.md §4u).
     - **Lineage truncation is _truncate_lineage**: a RELIABLE checkpoint
       when a checkpoint dir is available — localCheckpoint blocks are
       executor-local and die with the executor, which on a 1000-executor
@@ -510,6 +582,13 @@ def connected_components(
     - **Convergence is checked, never assumed**: raises instead of
       returning silently-wrong partial labels for a component whose graph
       diameter exceeds the iteration cap.
+
+    ``stats``, when given, receives ``edge_rows`` (the observed row count
+    of every edge list the call labelled: the input, then each contraction),
+    ``local_finish`` (whether one task finished the labelling),
+    ``iterations`` (loop iterations; 0 when the input was already small),
+    ``convergence_checks``, ``converged``, ``contractions``,
+    ``reliable_checkpoint`` and ``pointer_jump_engaged``.
     """
 
     def with_self_loops(e: DataFrame) -> DataFrame:
@@ -554,13 +633,17 @@ def connected_components(
         _release(labels)
         return lifted
 
-    edges = _truncate_lineage(with_self_loops(edges))
+    edge_rows: list[int] = []
+    edges = _truncate_counted(with_self_loops(edges), edge_rows)
     reliable = edges.sparkSession.sparkContext.getCheckpointDir() is not None
     comp = init_labels(edges)  # lazy: a distinct folded into window 1's plan
     mapping = None  # original doc_id -> current-graph node, once contracted
     iterations = checks = contractions = 0
-    converged = jump = False
+    converged = jump = local = False
     for it in range(1, max_iterations + 1):
+        if edge_rows[-1] <= _CC_LOCAL_EDGES:
+            local = True
+            break
         # fused propagate: self-loops put the node's own label in the min
         comp = _nb_min(edges, comp).select(
             F.col("doc_a").alias("doc_id"), F.col("nb_comp").alias("comp")
@@ -610,14 +693,15 @@ def connected_components(
         contractions += 1
         la = comp.select(F.col("doc_id").alias("a_id"), F.col("comp").alias("la"))
         lb = comp.select(F.col("doc_id").alias("b_id"), F.col("comp").alias("lb"))
-        contracted = _truncate_lineage(
+        contracted = _truncate_counted(
             with_self_loops(
                 edges.join(la, edges["doc_a"] == F.col("a_id"))
                 .join(lb, edges["doc_b"] == F.col("b_id"))
                 .filter(F.col("la") != F.col("lb"))
                 .select(F.col("la").alias("doc_a"), F.col("lb").alias("doc_b"))
                 .distinct()
-            )
+            ),
+            edge_rows,
         )
         # compose the original->current mapping (the just-materialized
         # labels move DOWN a level: they name the contracted nodes)
@@ -625,8 +709,20 @@ def connected_components(
         _release(edges)
         edges = contracted
         comp = init_labels(edges)  # lazy, as at loop start
+    if local:
+        # one partition without a shuffle: a single task reads every block
+        id_type = edges.schema["doc_a"].dataType
+        comp = _truncate_lineage(
+            edges.coalesce(1).mapInArrow(
+                _label_in_one_task,
+                StructType([StructField("doc_id", id_type), StructField("comp", id_type)]),
+            )
+        )
+        converged = True
     if stats is not None:
         stats.update(
+            edge_rows=edge_rows,
+            local_finish=local,
             iterations=iterations,
             convergence_checks=checks,
             converged=converged,
@@ -2142,8 +2238,10 @@ def curate_interleaved(
     feature rows; the final semi-join ships only kept doc_ids.
 
     The two sides are INDEPENDENT until the final semi-join, and the text
-    side is driver-synchronous (eager label and edge checkpoints, then the
-    CC loop's checkpoint and fixpoint jobs), so the media verdicts are
+    side is driver-synchronous (eager label and edge checkpoints, then CC's
+    counted edge checkpoint and, for a graph this small, its one-task
+    finish; a larger graph runs the loop's checkpoint and fixpoint jobs
+    first), so the media verdicts are
     materialized from a driver-side worker thread while the text side runs
     (guide §2.6 — overlap independent jobs so one job's tiny stages
     back-fill the other's idle cores): the media side overlaps the whole

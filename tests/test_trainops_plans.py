@@ -9,6 +9,7 @@ an inequality-only join condition.
 from __future__ import annotations
 
 import os
+import sys
 from pathlib import Path
 
 import pytest
@@ -71,16 +72,45 @@ def _chain_edges(spark, n):
     return spark.createDataFrame(rows, "doc_a: long, doc_b: long")
 
 
-def test_connected_components_chain_converges_at_cadence(spark, tmp_path):
-    """Deep-chain fixture: every node labels down to 0, convergence checks
-    run at the cadence (not per iteration), and lineage truncation uses a
-    RELIABLE checkpoint once a dir is configured.  Adaptive pointer jumping
-    (engaged after the first failed check) makes a diameter-11 chain
-    converge in ~6 rounds, not 11, and the direct fixpoint test detects
-    convergence at the first check past it — no extra static window."""
+def _union_find(pairs):
+    """Reference labels: node -> min node of its component, plain union-find."""
+    parent = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {n: find(n) for n in {x for p in pairs for x in p}}
+
+
+# connected_components' two paths, forced by the bound: -1 sends every graph,
+# the empty one included, through the loop; maxsize finishes every graph in
+# one task.
+_CC_PATHS = {"loop": -1, "one_task": sys.maxsize}
+
+
+@pytest.fixture(params=list(_CC_PATHS))
+def cc_path(request, monkeypatch):
+    monkeypatch.setattr(trainops, "_CC_LOCAL_EDGES", _CC_PATHS[request.param])
+    return request.param
+
+
+def test_connected_components_chain_converges_at_cadence(spark, tmp_path, cc_path):
+    """Deep-chain fixture: every node labels down to 0, and lineage
+    truncation uses a RELIABLE checkpoint once a dir is configured.  On the
+    loop, convergence checks run at the cadence (not per iteration);
+    adaptive pointer jumping (engaged after the first failed check) makes a
+    diameter-11 chain converge in ~6 rounds, not 11, and the direct
+    fixpoint test detects convergence at the first check past it — no extra
+    static window.  In one task the loop never starts."""
     sc = spark.sparkContext
-    if sc.getCheckpointDir() is None:
-        sc.setCheckpointDir(str(tmp_path / "cc-ckpt"))
+    sc.setCheckpointDir(str(tmp_path / "cc-ckpt"))  # a fresh dir per path
     stats = {}
     comp = trainops.connected_components(
         _chain_edges(spark, 12), max_iterations=24, stats=stats
@@ -88,15 +118,17 @@ def test_connected_components_chain_converges_at_cadence(spark, tmp_path):
     labels = {r["doc_id"]: r["comp"] for r in comp.collect()}
     assert labels == {i: 0 for i in range(12)}
     assert stats["converged"] and stats["reliable_checkpoint"]
-    # pointer jumping: diameter 11 must NOT take 11 per-hop rounds
-    assert stats["iterations"] <= 6
-    assert stats["convergence_checks"] <= 2
-    assert stats["pointer_jump_engaged"]  # deep chain trips the adaptive path
+    if cc_path == "loop":
+        # pointer jumping: diameter 11 must NOT take 11 per-hop rounds
+        assert stats["iterations"] <= 6
+        assert stats["convergence_checks"] <= 2
+        assert stats["pointer_jump_engaged"]  # deep chain trips the adaptive path
+        assert not stats["local_finish"]
+    else:
+        assert stats["local_finish"] and stats["iterations"] == 0
     # superseded checkpoints are deleted as the loop advances: a 15-round run
     # must NOT accumulate O(checks) table copies on durable storage — only
     # the final comp checkpoint survives (edges + earlier windows removed)
-    import os
-
     ckpt_root = sc.getCheckpointDir().replace("file:", "")
     leftover = [
         d for d in os.listdir(ckpt_root) if os.path.isdir(os.path.join(ckpt_root, d))
@@ -130,33 +162,44 @@ def _contraction_graph(spark):
         {"doc_a": b, "doc_b": a} for a, b in pairs
     ]
     edges = spark.createDataFrame(rows, "doc_a: long, doc_b: long")
-    # reference: plain union-find
-    parent = {}
-
-    def find(x):
-        while parent.setdefault(x, x) != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in pairs:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    return edges, {n: find(n) for n in {x for p in pairs for x in p}}
+    return edges, _union_find(pairs)
 
 
-def test_connected_components_contraction_differential(spark, tmp_path):
+def test_connected_components_contraction_differential(spark, tmp_path, cc_path):
     """r6 contraction path: a graph deep enough to fail the first window
     contracts (labels become nodes) and still produces EXACTLY the labels of
     a reference union-find — including components that fully converge before
-    the last contraction (their label must survive the left-join lift)."""
+    the last contraction (their label must survive the left-join lift).  In
+    one task the same graph gets the same labels without contracting."""
     edges, want = _contraction_graph(spark)
     stats: dict = {}
     comp = trainops.connected_components(edges, max_iterations=24, stats=stats)
     got = {r["doc_id"]: r["comp"] for r in comp.collect()}
     assert got == want
-    assert stats["converged"] and stats["contractions"] >= 1
+    assert stats["converged"]
+    if cc_path == "loop":
+        assert stats["contractions"] >= 1 and not stats["local_finish"]
+    else:
+        assert stats["local_finish"] and stats["contractions"] == 0
+
+
+def test_connected_components_hands_over_to_one_task_after_contraction(
+    spark, monkeypatch
+):
+    """A bound between the input's and the first contraction's edge rows:
+    the loop runs one window, contracts once, and one task finishes the
+    contracted graph; the lift back to the original ids still gives the
+    union-find labels."""
+    bound = 300
+    monkeypatch.setattr(trainops, "_CC_LOCAL_EDGES", bound)
+    edges, want = _contraction_graph(spark)
+    stats: dict = {}
+    comp = trainops.connected_components(edges, stats=stats)
+    assert {r["doc_id"]: r["comp"] for r in comp.collect()} == want
+    first, contracted = stats["edge_rows"]
+    assert first > bound >= contracted
+    assert stats["contractions"] == 1 and stats["local_finish"]
+    assert stats["iterations"] == trainops._CC_CHECK_EVERY
 
 
 def _clear_checkpoint_dir(sc):
@@ -169,48 +212,62 @@ def _clear_checkpoint_dir(sc):
         assert sc.getCheckpointDir() is None
 
 
-def test_connected_components_releases_local_checkpoint_blocks(spark):
+def _persistent_ids(sc):
+    return {int(k) for k in sc._jsc.getPersistentRDDs().keySet()}
+
+
+def test_connected_components_releases_local_checkpoint_blocks(spark, cc_path):
     """Dir-less (localCheckpoint) mode must not leak superseded blocks into
-    executor storage memory: after the loop returns, only the surviving
+    executor storage memory: after the call returns, only the surviving
     materialization(s) the returned frame depends on may remain persisted
     (r5 leaked ~4 blocks per run; over a 3-repeat 17-query bench that
     accumulation squeezed execution memory for every later query)."""
     sc = spark.sparkContext
     _clear_checkpoint_dir(sc)
-
-    def persistent_ids():
-        return {int(k) for k in sc._jsc.getPersistentRDDs().keySet()}
-
-    before = persistent_ids()
+    before = _persistent_ids(sc)
     stats: dict = {}
     comp = trainops.connected_components(
         _chain_edges(spark, 40), max_iterations=24, stats=stats
     )
-    leaked = persistent_ids() - before
+    leaked = _persistent_ids(sc) - before
     # exactly the returned frame's own materialization survives
     assert len(leaked) <= 1, f"superseded localCheckpoint blocks leaked: {leaked}"
-    assert stats["contractions"] >= 1  # the deep chain exercised every path
+    if cc_path == "loop":
+        assert stats["contractions"] >= 1  # the deep chain exercised every path
     assert comp.count() == 40
     comp._jdf  # keep the frame alive until after the assertion
 
 
-def test_connected_components_raises_instead_of_partial_labels(spark):
-    # pointer jumping covers ~3·2^k hops after k rounds, so forcing
-    # non-convergence needs a chain much deeper than the iteration cap
+def test_connected_components_raises_instead_of_partial_labels(spark, monkeypatch):
+    # the loop only: one task always converges.  Pointer jumping covers
+    # ~3·2^k hops after k rounds, so forcing non-convergence needs a chain
+    # much deeper than the iteration cap
+    monkeypatch.setattr(trainops, "_CC_LOCAL_EDGES", _CC_PATHS["loop"])
     with pytest.raises(RuntimeError, match="did not converge"):
         trainops.connected_components(_chain_edges(spark, 64), max_iterations=2)
 
 
-@pytest.mark.parametrize("mode", ["local", "reliable"])
-def test_connected_components_leaves_session_state_alone(spark, tmp_path, mode):
+@pytest.mark.parametrize(
+    "mode,path",
+    [
+        pytest.param("local", "loop", id="local"),
+        pytest.param("reliable", "loop", id="reliable"),
+        pytest.param("local", "one_task", id="local-one_task"),
+        pytest.param("reliable", "one_task", id="reliable-one_task"),
+    ],
+)
+def test_connected_components_leaves_session_state_alone(
+    spark, tmp_path, monkeypatch, mode, path
+):
     """CC shares its session with concurrent queries: while it runs on a
     worker thread, the main thread must see the session's shuffle width
     unchanged, and every materialization the main thread takes meanwhile
     (localCheckpoint blocks, or reliable checkpoint directories) must
-    survive the loop's releases and still read back correctly."""
+    survive the call's releases and still read back correctly."""
     import time
     from concurrent.futures import ThreadPoolExecutor
 
+    monkeypatch.setattr(trainops, "_CC_LOCAL_EDGES", _CC_PATHS[path])
     sc = spark.sparkContext
     if mode == "local":
         _clear_checkpoint_dir(sc)
@@ -233,7 +290,7 @@ def test_connected_components_leaves_session_state_alone(spark, tmp_path, mode):
         comp = fut.result(timeout=60)
     assert widths == {width}
     assert mine, "no checkpoint was taken while CC ran"
-    persisted = {int(k) for k in sc._jsc.getPersistentRDDs().keySet()}
+    persisted = _persistent_ids(sc)
     for n, df in enumerate(mine, start=1):
         rdd = df._jdf.queryExecution().logical().rdd()
         if mode == "local":
@@ -246,6 +303,136 @@ def test_connected_components_leaves_session_state_alone(spark, tmp_path, mode):
     for df in mine:
         trainops._release(df)
     _clear_checkpoint_dir(sc)  # later tests run dir-less, as before this one
+
+
+@pytest.mark.parametrize("mode", ["local", "reliable"])
+def test_connected_components_counts_edge_rows_by_observation(
+    spark, tmp_path, monkeypatch, mode
+):
+    """``edge_rows[0]`` is the row count of the truncated edge list (input
+    plus one self-loop per node), read from the truncation job's observe()
+    metric in both checkpoint modes."""
+    monkeypatch.setattr(trainops, "_CC_LOCAL_EDGES", _CC_PATHS["one_task"])
+    sc = spark.sparkContext
+    if mode == "local":
+        _clear_checkpoint_dir(sc)
+    else:
+        sc.setCheckpointDir(str(tmp_path / "cc-ckpt"))
+    edges, _ = _contraction_graph(spark)
+    stats: dict = {}
+    trainops.connected_components(edges, stats=stats)
+    nodes = edges.select("doc_a").distinct().count()
+    assert stats["edge_rows"] == [edges.count() + nodes]
+    assert stats["reliable_checkpoint"] == (mode == "reliable")
+    _clear_checkpoint_dir(sc)
+
+
+# Ids whose order a cast would break: strings where string order is not
+# numeric order ("10" < "9"), non-ASCII strings whose UTF-8 byte order differs
+# from UTF-16 order ("ﬁ" < "😀" bytewise, as Spark compares), int64 ids
+# above 2^53 that a double cannot tell apart, and no edges at all.
+_BIG = 2**53 + 1
+_ID_CASES = {
+    "strings": (
+        "string",
+        [("9", "10"), ("10", "100"), ("😀", "ﬁ"), ("é", "z"), ("Z", "a")],
+    ),
+    "int64_above_2p53": (
+        "long",
+        [(_BIG + 2, _BIG + 1), (_BIG + 1, _BIG), (_BIG + 4, _BIG + 3)],
+    ),
+    "empty": ("long", []),
+}
+
+
+@pytest.mark.parametrize("case", list(_ID_CASES))
+def test_connected_components_exact_ids(spark, cc_path, case):
+    """Both paths label by the min id compared in the id column's own type
+    and return that type: no cast through double, strings ordered bytewise."""
+    id_type, pairs = _ID_CASES[case]
+    rows = pairs + [(b, a) for a, b in pairs]
+    edges = spark.createDataFrame(rows, f"doc_a {id_type}, doc_b {id_type}")
+    stats: dict = {}
+    comp = trainops.connected_components(edges, stats=stats)
+    assert {r["doc_id"]: r["comp"] for r in comp.collect()} == _union_find(pairs)
+    assert comp.schema.simpleString() == (
+        f"struct<doc_id:{edges.schema['doc_a'].dataType.simpleString()},"
+        f"comp:{edges.schema['doc_a'].dataType.simpleString()}>"
+    )
+    assert stats["local_finish"] == (cc_path == "one_task")
+
+
+@pytest.mark.parametrize("mode", ["local", "reliable"])
+def test_connected_components_concurrent_calls_each_use_their_own_count(
+    spark, tmp_path, monkeypatch, mode
+):
+    """Two calls from two threads on one session, one graph below the bound
+    and one above it: each call takes the path its own observed count picks,
+    both label exactly, neither leaks a block or checkpoint dir, and the
+    session's shuffle width never moves."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    sc = spark.sparkContext
+    ckpt = tmp_path / "cc-ckpt"
+    if mode == "local":
+        _clear_checkpoint_dir(sc)
+    else:
+        sc.setCheckpointDir(str(ckpt))
+    monkeypatch.setattr(trainops, "_CC_LOCAL_EDGES", 100)
+    small = _chain_edges(spark, 12)  # 22 edge rows + 12 self-loops
+    big, big_want = _contraction_graph(spark)  # 592 rows with self-loops
+    width = spark.conf.get("spark.sql.shuffle.partitions")
+    before = _persistent_ids(sc)
+    small_stats: dict = {}
+    big_stats: dict = {}
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        futs = [
+            pool.submit(trainops.connected_components, small, stats=small_stats),
+            pool.submit(trainops.connected_components, big, stats=big_stats),
+        ]
+        small_comp, big_comp = (f.result(timeout=600) for f in futs)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == width
+    assert small_stats["edge_rows"] == [34]
+    assert small_stats["local_finish"] and small_stats["iterations"] == 0
+    assert big_stats["edge_rows"][0] == 592 and big_stats["iterations"] > 0
+    assert {r["doc_id"]: r["comp"] for r in small_comp.collect()} == {
+        i: 0 for i in range(12)
+    }
+    assert {r["doc_id"]: r["comp"] for r in big_comp.collect()} == big_want
+    # only the two returned frames' own materializations survive
+    if mode == "local":
+        assert len(_persistent_ids(sc) - before) <= 2
+    else:
+        dirs = [p for p in ckpt.glob("*/*") if p.is_dir()]
+        assert len(dirs) <= 2, f"checkpoint dirs leaked: {dirs}"
+    _clear_checkpoint_dir(sc)
+
+
+def test_component_roots_match_union_find():
+    """The one-task kernel against the union-find reference on random
+    graphs, shuffled-id paths and one-directional edge lists."""
+    import random
+
+    import numpy as np
+
+    rng = random.Random(5)
+    for trial in range(30):
+        n = rng.randint(1, 300)
+        if trial % 3 == 0:
+            order = list(range(n))
+            rng.shuffle(order)
+            pairs = list(zip(order, order[1:]))
+        else:
+            pairs = [(rng.randrange(n), rng.randrange(n)) for _ in range(rng.randint(0, 2 * n))]
+        if trial % 2:
+            pairs += [(b, a) for a, b in pairs]
+        src = np.array([a for a, _ in pairs], dtype=np.int64)
+        dst = np.array([b for _, b in pairs], dtype=np.int64)
+        roots = trainops._component_roots(src, dst, n)
+        want = _union_find(pairs)
+        assert {v: int(roots[v]) for v in want} == want
+        isolated = set(range(n)) - set(want)
+        assert all(roots[v] == v for v in isolated)
 
 
 # (test_text_repetition_matches_duckdb_oracle removed round 5:
