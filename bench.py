@@ -147,7 +147,6 @@ def run_extraction_bench(spark, n_docs: int) -> dict:
         run_id="bench-check",
     ).spans_out.collect()
     spot_check(sample_rows, sample_blobs, got_rows)
-    res.unpersist()
     return {
         "docs": int(out_spans["docs"]),
         "spans_kept": int(out_spans["spans"]),

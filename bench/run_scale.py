@@ -137,14 +137,12 @@ def main() -> None:
             wblobs = spark.read.parquet(f"{args.warm_corpus}/media_blobs")
         warm = run_extraction(spark, wspans, wblobs, run_id=f"warm-{args.cores}")
         warm.spans_out.write.format("noop").mode("overwrite").save()
-        warm.unpersist()
 
         def timed_run() -> None:
             res = run_extraction(spark, spans, blobs, run_id=f"scale-{args.cores}")
             row = res.spans_out.agg(
                 F.count("*").alias("docs"), F.sum(F.size("spans_out")).alias("spans")
             ).collect()[0]
-            res.unpersist()
             assert row["docs"] == n_docs
 
         cleanup = lambda: None  # noqa: E731

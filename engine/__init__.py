@@ -19,8 +19,8 @@ Module map (see SURVEY.md §7.1):
 - :mod:`engine.tables`    — HTML-table → rows (F12/F13)
 - :mod:`engine.assemble`  — per-doc offset-sorted re-nest (A2, W1-W3)
 - :mod:`engine.metrics`   — lineage + metrics tables, observe() instrumentation
-- :mod:`engine.pipeline`  — end-to-end ``run_extraction``
-- :mod:`engine.skew`      — salting / repartition / AQE policy
+- :mod:`engine.pipeline`  — end-to-end ``run_extraction`` and ``derive_outputs``
+- :mod:`engine.io`        — durable runs: spine checkpoint, resume, the one output writer
 - :mod:`engine.relational`— driver-checked relational operator queries (SURVEY §2 ↔ SQL)
 """
 

@@ -24,8 +24,8 @@ from engine.session import per_session
 
 @per_session
 def _reassemble_exprs() -> tuple:
-    """(kept-span struct, its sorted per-doc aggregate, output projection)
-    of :func:`reassemble`."""
+    """(sorted per-doc aggregate of the kept spans, output projection) of
+    :func:`reassemble`."""
     kept_span = F.when(
         F.col("status") == "kept",
         F.struct(
@@ -47,35 +47,20 @@ def _reassemble_exprs() -> tuple:
         ),
     ).alias("spans_out")
     return (
-        kept_span,
         F.array_sort(F.collect_list(kept_span)).alias("_ordered"),
         (F.col("doc_id"), spans_out),
     )
 
 
-def reassemble(spine: DataFrame, salt_partials: int = 0) -> DataFrame:
+def reassemble(spine: DataFrame) -> DataFrame:
     """spine(doc_id, offset, kind, media_ref, out_text, status) →
     spans_out(doc_id, spans_out array<struct<kind,text,media_ref,offset>>).
 
-    ``salt_partials > 0`` switches to salted two-phase aggregation for
-    doc-level skew (north_rule: a pathological document with millions of
-    spans would otherwise pin one reducer): phase 1 groups by
-    (doc_id, pmod(hash(offset), salt)) building partial arrays map-side,
-    phase 2 merges per doc with flatten + one final array_sort.  Same output
-    either way (order comes from the sort, not the grouping) — test-asserted.
-    AQE skew-split handles moderate skew without this; the salt is for the
-    heavy tail.
+    One aggregation, no salt: a document is one input row, so its spans are
+    exploded inside one task and the map-side partial ``collect_list`` sends
+    the reducer one partial per map task.  A salted second exchange would
+    bound nothing, because the final row holds the whole document either way
+    (PLANS.md §4v measures a 300k-span mega-doc).
     """
-    from engine.skew import salt_col
-
-    kept_span, ordered, out_cols = _reassemble_exprs()
-    if salt_partials > 0:
-        partial = spine.groupBy(
-            "doc_id", salt_col(salt_partials, "offset").alias("_salt")
-        ).agg(F.collect_list(kept_span).alias("_part"))
-        nested = partial.groupBy("doc_id").agg(
-            F.array_sort(F.flatten(F.collect_list("_part"))).alias("_ordered")
-        )
-    else:
-        nested = spine.groupBy("doc_id").agg(ordered)
-    return nested.select(*out_cols)
+    ordered, out_cols = _reassemble_exprs()
+    return spine.groupBy("doc_id").agg(ordered).select(*out_cols)

@@ -118,7 +118,7 @@ def _text_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 def x_text_branch_extraction(spark, sf_dir):
     spans = _text_spans(spark, sf_dir)
     blobs = spark.createDataFrame([], MEDIA_BLOBS_SCHEMA)
-    res = run_extraction(spark, spans, blobs, run_id="driver-x-text", persist=False)
+    res = run_extraction(spark, spans, blobs, run_id="driver-x-text")
     return res.spans_out.select(
         "doc_id", F.explode("spans_out").alias("s")
     ).select("doc_id", F.col("s.offset").alias("offset"), F.col("s.text").alias("text"))
@@ -368,7 +368,7 @@ def interleaved_corpus(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, Dat
 )
 def x_media_route_counts(spark, sf_dir):
     spans, blobs = interleaved_corpus(spark, sf_dir)
-    res = run_extraction(spark, spans, blobs, run_id="driver-x-media", persist=False)
+    res = run_extraction(spark, spans, blobs, run_id="driver-x-media")
     return (
         res.spine.filter(F.col("kind") == "media")
         .groupBy("mode", "status", "reason")
@@ -429,7 +429,7 @@ def x_documents_by_mode(spark, sf_dir):
     from engine.parse import doc_modes, extract_documents
 
     spans, blobs = interleaved_corpus(spark, sf_dir)
-    res = run_extraction(spark, spans, blobs, run_id="driver-x-docs", persist=False)
+    res = run_extraction(spark, spans, blobs, run_id="driver-x-docs")
     docs = extract_documents(res.spans_out, modes=doc_modes(res.spine))
     return docs.select(
         "doc_id",
@@ -531,7 +531,7 @@ def x_audit_media_pixels(spark, sf_dir):
     from engine.validate import audit_media_vs_pixels
 
     spans, blobs = interleaved_corpus(spark, sf_dir)
-    res = run_extraction(spark, spans, blobs, run_id="driver-x-px-audit", persist=False)
+    res = run_extraction(spark, spans, blobs, run_id="driver-x-px-audit")
     k = F.col("doc_id").cast("long") % 4
     is_media = F.col("kind") == "media"
     # Deterministic tampering of the CLAIMED spine — the audit must catch each
@@ -984,7 +984,7 @@ def x_curate_interleaved_spans(spark, sf_dir):
 def flagship(spark: SparkSession, sf_dir: str = "/root/testdata/sf0.001") -> DataFrame:
     """Full pipeline over the interleaved corpus; returns exploded spans_out."""
     spans, blobs = interleaved_corpus(spark, sf_dir)
-    res = run_extraction(spark, spans, blobs, run_id="flagship", persist=False)
+    res = run_extraction(spark, spans, blobs, run_id="flagship")
     return res.spans_out.select("doc_id", F.explode("spans_out").alias("s")).select(
         "doc_id",
         F.col("s.kind").alias("kind"),

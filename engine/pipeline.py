@@ -12,18 +12,18 @@ hop graph (/root/reference/app/tasks.py:76-96 chain; 534-650 batch):
 
 Catalyst gets the whole plan: predicate pushdown into the parquet scan, ONE
 shuffle total (the re-nest) — payload bytes never shuffle; the only Python is
-the Arrow decode batch.  For multi-output consumption, checkpoint the spine
-once via engine.io.materialize_run instead of caching it in executors.
+the Arrow decode batch.  Every mode derives its outputs from a spine with
+:func:`derive_outputs`: ``run_extraction`` from the lazy spine,
+engine.io.materialize_run and the stream from a written one.
 """
 
 from __future__ import annotations
 
 import uuid
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from engine import textops
 from engine.assemble import reassemble
@@ -38,12 +38,7 @@ from engine.metrics import (
 from engine.routing import route
 from engine.session import per_session
 
-# Conf key selecting salted two-phase reassembly for mega-document skew
-# (spans-per-doc heavy tail).  0 = plain single-phase aggregation; N > 0 =
-# N-way salted partials (assemble.reassemble).  A deployment sets this from
-# its corpus stats (e.g. if spans-per-doc p99 exceeds the rows one reducer
-# should hold) without code edits.
-SALT_PARTIALS_CONF = "spark.extraction.saltPartials"
+OUTPUT_NAMES = ("spans_out", "lineage", "metrics", "conf_hist", "run_totals")
 
 
 @dataclass
@@ -52,13 +47,10 @@ class ExtractionResult:
     lineage: DataFrame
     metrics: DataFrame
     conf_hist: DataFrame
+    run_totals: DataFrame
     spine: DataFrame
     run_id: str
-    observation: object = field(default=None)
-    run_totals: DataFrame = field(default=None)
-
-    def unpersist(self) -> None:
-        self.spine.unpersist()
+    observation: object
 
 
 def _cols(*names: str) -> tuple:
@@ -244,44 +236,39 @@ def build_spine(
     return _row_local_branch(ex).unionByName(_media_branch(ex, blobs))
 
 
+def derive_outputs(spine: DataFrame, run_id: str) -> dict[str, DataFrame]:
+    """All derived output tables (keyed by :data:`OUTPUT_NAMES`) for ONE run,
+    computed from that run's spine only.  Runs are disjoint by doc_id (the
+    resume anti-join guarantees it), so per-run spans_out partitions union
+    into the complete table without any cross-run aggregation."""
+    return {
+        "spans_out": reassemble(spine),
+        "lineage": lineage_df(spine, run_id),
+        "metrics": metrics_df(spine, run_id),
+        "conf_hist": conf_histogram_df(spine, run_id),
+        "run_totals": run_totals_df(spine, run_id),
+    }
+
+
 def run_extraction(
     spark: SparkSession,
     spans: DataFrame,
     blobs: DataFrame,
     run_id: str | None = None,
-    persist: bool = False,
-    salt_partials: int | None = None,
 ) -> ExtractionResult:
-    """The single public entry: spans + blobs in, three output frames out.
+    """The single public entry: spans + blobs in, the five
+    :func:`derive_outputs` frames plus the observed spine out.
 
-    ``persist=False`` by default: executor-cache writes of the full decoded
-    spine measurably serialize under high core counts (32-thread local bench:
-    ~5× slowdown), and at real scale the right amortization for multi-output
-    consumption is writing the spine ONCE to a checkpoint table and deriving
-    spans_out/lineage/metrics from that (engine.io.materialize_run) — not
-    caching it in executor memory.  Set persist=True only for small
-    interactive runs that read all three outputs ad hoc.
-
-    ``salt_partials``: explicit salt width for the re-nest aggregation, or
-    None to read ``spark.extraction.saltPartials`` from the session conf
-    (default 0 = unsalted) — the mega-document skew path is reachable by
-    configuration, no code edit (see assemble.reassemble; equal output either
-    way, test-asserted).
+    Every frame is lazy and re-runs the spine when read, so a caller that
+    reads several outputs pays the decode once per output.  For
+    multi-output consumption write the spine once and derive from the
+    written copy (engine.io.materialize_run) rather than caching the spine
+    in executors: executor-cache writes of the full decoded spine
+    measurably serialize under high core counts (32-thread local bench:
+    ~5× slowdown).
     """
     run_id = run_id or uuid.uuid4().hex[:12]
-    if salt_partials is None:
-        salt_partials = int(spark.conf.get(SALT_PARTIALS_CONF, "0"))
-    spine = build_spine(spark, spans, blobs)
-    spine, obs = observed(spine)
-    if persist:
-        spine = spine.persist(StorageLevel.MEMORY_AND_DISK)
+    spine, obs = observed(build_spine(spark, spans, blobs))
     return ExtractionResult(
-        spans_out=reassemble(spine, salt_partials=salt_partials),
-        lineage=lineage_df(spine, run_id),
-        metrics=metrics_df(spine, run_id),
-        conf_hist=conf_histogram_df(spine, run_id),
-        spine=spine,
-        run_id=run_id,
-        observation=obs,
-        run_totals=run_totals_df(spine, run_id),
+        **derive_outputs(spine, run_id), spine=spine, run_id=run_id, observation=obs
     )

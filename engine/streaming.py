@@ -10,18 +10,17 @@ appends per micro-batch.  Ordering remains a property of the data (offset), so
 late or out-of-order arrival of whole documents is absorbed exactly as in
 batch; per-batch lineage/metrics appends give the progress stream (X8).
 
-Batch/stream share one code path: ``build_spine`` is called inside
-foreachBatch — no logic is duplicated for the streaming case.
+Batch/stream share one code path: foreachBatch calls the batch path's
+``build_spine`` and ``derive_outputs``, and writes through its
+``io.write_outputs`` with the same commit-marker checks — no logic is
+duplicated for the streaming case.
 """
 
 from __future__ import annotations
 
 import os
-from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.util import inheritable_thread_target
-
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
@@ -31,8 +30,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from engine.io import derive_outputs
-from engine.pipeline import build_spine
+from engine.io import write_outputs
+from engine.pipeline import build_spine, derive_outputs
 from engine.schema import SPAN_STRUCT, SPANS_SCHEMA
 
 
@@ -312,41 +311,15 @@ def stream_extraction(
         a single-batch drain lands within 1.9× of pure batch while writing
         five output trees instead of one — PLANS.md §4i), and it also gives
         the stream the same durable interim checkpoint (S4) the batch path
-        has.
-
-        The four derived writes are independent jobs over the just-written
-        spine; submitting them from a driver-side thread pool overlaps their
-        scheduler/commit latency (each is a small job at micro-batch scale,
-        so the floor is submission + parquet commit, not compute) — the
-        standard Spark concurrent-jobs idiom.  Threads only submit; executors
-        still share the same cores, so batch-scale throughput is unchanged
-        while the per-micro-batch fixed cost shrinks.  Interleaved A/B
-        (BENCH/ab_stream_r5.json: pool vs sequential alternating in one
-        process, 8 micro-batches): pool wins every paired round — 1.19×
-        best / 1.11× median wall."""
+        has.  run_totals is not written here: one row per micro-batch would
+        break its one-row-per-run contract."""
         session = batch_df.sparkSession
-        spine_dir = os.path.join(out_dir, "spine", f"batch={batch_id}")
-        build_spine(session, batch_df, blobs).write.mode("overwrite").parquet(
-            spine_dir
-        )
-        spine = session.read.parquet(spine_dir)
+        part = f"batch={batch_id}"
+        write_outputs({"spine": build_spine(session, batch_df, blobs)}, out_dir, part)
+        spine = session.read.parquet(os.path.join(out_dir, "spine", part))
         outputs = derive_outputs(spine, run_id)
-
-        def write_one(name: str) -> None:
-            outputs[name].write.mode("overwrite").parquet(
-                os.path.join(out_dir, name, f"batch={batch_id}")
-            )
-
-        # Each write inherits the batch's job group and local properties.
-        # Wrapped once per write: the wrapper captures one copy of the
-        # properties, and concurrent SQL executions must not share it.
-        with ThreadPoolExecutor(max_workers=4) as pool:
-            futures = [
-                pool.submit(inheritable_thread_target(session)(write_one), n)
-                for n in ("spans_out", "lineage", "metrics", "conf_hist")
-            ]
-            for f in futures:
-                f.result()  # surface the first failure, don't swallow it
+        del outputs["run_totals"]
+        write_outputs(outputs, out_dir, part)
 
     writer = (
         stream.writeStream.foreachBatch(process_batch)

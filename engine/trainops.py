@@ -422,8 +422,8 @@ def _truncate_lineage(df: DataFrame) -> DataFrame:
     # curation job 1.9x SLOWER (10k-doc corpus, pinned 8 cores, checkpoint
     # dir set: wall 11.2 -> 21.6 s, task-time 46.3 -> 68.8 s).  Columnar
     # cache encode of wide text frames costs more than recomputing two
-    # n-gram groupBys; same conclusion as run_extraction's persist=False
-    # default for the decoded spine.  Recompute-on-write stands as the
+    # n-gram groupBys; the same reason run_extraction never caches the
+    # decoded spine.  Recompute-on-write stands as the
     # cheaper side of the trade at every scale tested.
     return df.checkpoint(eager=True)
 

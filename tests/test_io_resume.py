@@ -277,3 +277,27 @@ def test_bucketed_spine_heals_without_catalog(spark, corpus, tmp_path):
         spark, spans, blobs, out, run_id="hb2", bucket_spine=4
     )
     assert r2["spans_out"].count() == n
+
+
+def test_write_outputs_raises_a_failed_write_after_committing_the_rest(spark, tmp_path):
+    """One derived write fails at run time: write_outputs raises that error
+    only after the other write finished, the failed directory carries no
+    _SUCCESS marker (resume re-derives it) and the good one does."""
+    import os
+
+    import pytest
+
+    from engine.io import write_outputs
+
+    out = str(tmp_path / "w")
+    bad = spark.range(64).select(
+        F.when(F.col("id") == 7, F.raise_error(F.lit("derived write boom")))
+        .otherwise(F.col("id"))
+        .alias("id")
+    )
+    good = spark.range(64)
+    with pytest.raises(Exception, match="derived write boom"):
+        write_outputs({"bad": bad, "good": good}, out, "run=x")
+    assert not os.path.isfile(os.path.join(out, "bad", "run=x", "_SUCCESS"))
+    assert os.path.isfile(os.path.join(out, "good", "run=x", "_SUCCESS"))
+    assert spark.read.parquet(os.path.join(out, "good", "run=x")).count() == 64

@@ -32,7 +32,6 @@ def test_span_sequence_equality(spark, corpus, corpus_dfs):
     assert not mismatches, f"{len(mismatches)} docs mismatch; first: " + str(
         next(iter(mismatches.items()))
     )
-    result.unpersist()
 
 
 def test_lineage_accounts_every_span(spark, corpus, corpus_dfs):
@@ -52,7 +51,6 @@ def test_lineage_accounts_every_span(spark, corpus, corpus_dfs):
             want[(row["doc_id"], off)] = status
     got = {(r["doc_id"], r["offset"]): r["status"] for r in lineage}
     assert got == want
-    result.unpersist()
 
 
 def test_metrics_totals(spark, corpus, corpus_dfs):
@@ -74,7 +72,6 @@ def test_metrics_totals(spark, corpus, corpus_dfs):
     obs = result.observation.get
     assert obs["spans_total"] == total
     assert obs["spans_kept"] == m["kept"]
-    result.unpersist()
 
 
 def test_output_order_is_offset_not_arrival(spark):
@@ -93,7 +90,7 @@ def test_output_order_is_offset_not_arrival(spark):
     ]
     spans = spark.createDataFrame(rows, SPANS_SCHEMA)
     blobs = spark.createDataFrame([], MEDIA_BLOBS_SCHEMA)
-    result = run_extraction(spark, spans, blobs, run_id="t-order", persist=False)
+    result = run_extraction(spark, spans, blobs, run_id="t-order")
     [row] = result.spans_out.collect()
     assert [s["text"] for s in row["spans_out"]] == [
         "first line",
@@ -116,60 +113,37 @@ def test_fully_skipped_doc_has_empty_output(spark):
     ]
     spans = spark.createDataFrame(rows, SPANS_SCHEMA)
     blobs = spark.createDataFrame([], MEDIA_BLOBS_SCHEMA)
-    result = run_extraction(spark, spans, blobs, run_id="t-empty", persist=False)
+    result = run_extraction(spark, spans, blobs, run_id="t-empty")
     [row] = result.spans_out.collect()
     assert row["doc_id"] == "d-skip"
     assert row["spans_out"] == []
 
 
-def test_salted_reassembly_equals_default(spark, corpus, corpus_dfs):
-    """Two-phase (salted) re-nest must produce byte-identical output —
-    including a synthetic mega-doc exercising the skew path."""
-    import pyspark.sql.functions as F
+def test_mega_doc_reassembles_in_offset_order(spark, corpus, corpus_dfs):
+    """A 3,000-span doc (arriving shuffled) next to the corpus re-nests in one
+    aggregation to all 3,000 spans in offset order; the other docs keep the
+    oracle's output."""
+    import random
 
     from engine.assemble import reassemble
     from engine.pipeline import build_spine
-    from engine.schema import MEDIA_BLOBS_SCHEMA, SPANS_SCHEMA
+    from engine.schema import SPANS_SCHEMA
 
+    spans_rows, blob_rows = corpus
     spans, blobs = corpus_dfs
-    mega = spark.createDataFrame(
-        [
-            {
-                "doc_id": "mega",
-                "spans": [
-                    {"kind": "text", "text": f"line {i % 7}", "media_ref": None, "offset": i}
-                    for i in range(3000)
-                ],
-            }
-        ],
-        SPANS_SCHEMA,
-    )
-    all_spans = spans.unionByName(mega)
-    spine = build_spine(spark, all_spans, blobs)
-    a = {r["doc_id"]: r["spans_out"] for r in reassemble(spine).collect()}
-    b = {r["doc_id"]: r["spans_out"] for r in reassemble(spine, salt_partials=8).collect()}
-    assert a == b
-    assert len(a["mega"]) == 3000
-
-
-def test_salt_conf_selects_salted_pipeline_end_to_end(spark, corpus, corpus_dfs):
-    """The mega-doc skew path is reachable by configuration alone:
-    spark.extraction.saltPartials > 0 routes run_extraction through salted
-    two-phase reassembly, with output identical to the unsalted run."""
-    from engine.pipeline import SALT_PARTIALS_CONF, run_extraction
-
-    spans, blobs = corpus_dfs
-    plain = _collect_spans_out(run_extraction(spark, spans, blobs, run_id="p"))
-    spark.conf.set(SALT_PARTIALS_CONF, "8")
-    try:
-        res = run_extraction(spark, spans, blobs, run_id="s")
-        # plan proof the conf took effect: two aggregate phases on the way
-        # to spans_out (partial arrays per salt, then flatten per doc)
-        plan = res.spans_out._jdf.queryExecution().optimizedPlan().toString()
-        assert plan.count("Aggregate") >= 2
-        assert _collect_spans_out(res) == plain
-    finally:
-        spark.conf.set(SALT_PARTIALS_CONF, "0")
+    mega_spans = [
+        {"kind": "text", "text": f"line {i % 7}", "media_ref": None, "offset": i}
+        for i in range(3000)
+    ]
+    random.Random(3).shuffle(mega_spans)
+    mega = spark.createDataFrame([{"doc_id": "mega", "spans": mega_spans}], SPANS_SCHEMA)
+    spine = build_spine(spark, spans.unionByName(mega), blobs)
+    got = {
+        r["doc_id"]: [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in r["spans_out"]]
+        for r in reassemble(spine).collect()
+    }
+    assert [s[3] for s in got.pop("mega")] == list(range(3000))
+    assert got == oracle.golden_for_corpus(spans_rows, blob_rows)
 
 
 def test_run_totals_exact_doc_count(spark, corpus, corpus_dfs):
@@ -251,7 +225,7 @@ def test_null_kind_becomes_error_lineage(spark):
     blobs = spark.createDataFrame([], MEDIA_BLOBS_SCHEMA)
     from engine.pipeline import run_extraction
 
-    res = run_extraction(spark, spans, blobs, run_id="t-nullkind", persist=False)
+    res = run_extraction(spark, spans, blobs, run_id="t-nullkind")
     lin = {r["offset"]: (r["status"], r["reason"]) for r in res.lineage.collect()}
     assert len(lin) == 3  # nothing silently dropped
     assert lin[1] == ("error", "bad_kind")
@@ -277,7 +251,6 @@ def test_metrics_counters_additive_and_hist_separate(spark, corpus, corpus_dfs):
     assert all(r["conf_bucket"] is not None for r in hist)
     spine_conf = res.spine.filter(F.col("conf").isNotNull()).count()
     assert sum(r["conf_count"] for r in hist) == spine_conf
-    res.unpersist()
 
 
 def test_spine_plan_scans_spans_twice_not_thrice(spark, corpus_dfs):

@@ -540,3 +540,32 @@ def test_stream_lm_perplexity_matches_batch(spark, tmp_path):
     got = {r["doc_id"]: tuple(r)[1:] for r in spark.read.parquet(str(out)).collect()}
     want = {r["doc_id"]: tuple(r)[1:] for r in lm_perplexity(batch, ref).collect()}
     assert got == want and len(got) == 24
+
+
+def test_stream_surfaces_a_missing_commit_marker(spark, tmp_path):
+    """With commit markers switched off, the stream's spine write fails the
+    same marker check as the batch path's, and the query terminates with it
+    instead of writing outputs that resume would never trust."""
+    import pytest
+    from pyspark.errors import StreamingQueryException
+
+    corpus_dir = str(tmp_path / "corpus")
+    write_corpus(corpus_dir, n_docs=10, seed=23, docs_per_file=5)
+    blobs = spark.read.parquet(f"{corpus_dir}/media_blobs")
+    key = "mapreduce.fileoutputcommitter.marksuccessfuljobs"
+    before = spark.conf.get(key, None)
+    spark.conf.set(key, "false")
+    q = None
+    try:
+        q = stream_extraction(
+            spark, f"{corpus_dir}/spans", blobs, str(tmp_path / "out"), run_id="nomark"
+        )
+        with pytest.raises(StreamingQueryException, match="produced no _SUCCESS marker"):
+            q.awaitTermination(180)
+    finally:
+        if q is not None:
+            q.stop()
+        if before is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, before)
